@@ -135,29 +135,6 @@ object AbProbe {
       .select("r.*").orderBy("rsd_permille")
   }
 
-  /** piiRedact without the fan-out, with ckpt-before-sort. */
-  private def piiPlainCkpt(spark: SparkSession, dir: String): DataFrame = {
-    import graft.sources.Tables.documents
-    val emailRe = "[a-zA-Z0-9._%+-]+@[a-zA-Z0-9.-]+\\.[a-zA-Z]{2,}"
-    val phoneRe = "\\+1-555-[0-9]{4}"
-    val salted = documents(spark, dir).select(
-      col("doc_id"),
-      concat(col("text"),
-        lit(" contact user"), col("doc_id"), lit("@example.com or +1-555-"),
-        lpad(pmod(col("doc_id"), lit(10000)).cast("string"), 4, "0")).as("text"))
-    val redacted = regexp_replace(
-      regexp_replace(col("text"), lit(emailRe), lit("<EMAIL>")),
-      lit(phoneRe), lit("<PHONE>"))
-    salted.select(
-      col("doc_id"),
-      regexp_count(col("text"), lit(emailRe)).cast("bigint").as("n_emails"),
-      regexp_count(col("text"), lit(phoneRe)).cast("bigint").as("n_phones"),
-      length(redacted).as("redacted_len"),
-      md5(redacted).as("redacted_md5"))
-      .localCheckpoint()
-      .orderBy("doc_id")
-  }
-
   /** rollingMedian WITHOUT the pre-sort localCheckpoint. */
   private def rollmedNoCkpt(spark: SparkSession, dir: String): DataFrame = {
     import graft.sources.Tables.lineitem
@@ -201,9 +178,12 @@ object AbProbe {
     spark.sparkContext.setLogLevel("ERROR")
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     type Q = (SparkSession, String) => DataFrame
+    // each variant builds on its own session carrying its partition
+    // count, which replaySession reads from the parent session's conf
     def withParts(n: String, q: Q): Q = (s, d) => {
-      sys.props("graft.replay.partitions") = n
-      try q(s, d) finally sys.props.remove("graft.replay.partitions")
+      val own = s.newSession()
+      own.conf.set("graft.replay.partitions", n)
+      q(own, d)
     }
     def parts84(name: String): (Q, Q) = {
       val q = graft.SparkEntry.queries(name)
@@ -233,7 +213,6 @@ object AbProbe {
           .localCheckpoint().orderBy("doc_id"),
         (s: SparkSession, d: String) => graft.operators.TextAnalysis
           .codeDetectOn(graft.sources.Tables.documents(s, d)).orderBy("doc_id"))),
-      "pii" -> ((graft.SparkEntry.queries("text_pii_redact"), piiPlainCkpt _)),
       "winnow" -> ((graft.SparkEntry.queries("dedup_winnowing"),
         (s: SparkSession, d: String) => graft.operators.Dedup
           .winnowingOn(graft.sources.Tables.documents(s, d)).orderBy("doc_id"))),

@@ -559,17 +559,22 @@ object TextAnalysis {
     * sort, embarrassingly parallel at any scale. The regexes stay in
     * the portable character-class dialect both engines (and RE2-class
     * matchers generally) agree on. */
-  def piiRedact(spark: SparkSession, dir: String): DataFrame = {
-    val emailRe = "[a-zA-Z0-9._%+-]+@[a-zA-Z0-9.-]+\\.[a-zA-Z]{2,}"
-    val phoneRe = "\\+1-555-[0-9]{4}"
+  def piiRedact(spark: SparkSession, dir: String): DataFrame =
     // r16: the r15 scan fan-out is dropped and the projection is
     // materialized once before the global sort instead (see
     // codeDetect — same interleaved A/B verdict, 0.76 median): the
     // range exchange's sampling pass re-ran the regex kernel, which
     // is what the fan-out was amortizing. The checkpointed relation
-    // is narrow (counts + md5); the plan now has NO hash exchange at
-    // all, restoring the spec's original no-shuffle pin.
-    val salted = documents(spark, dir).select(
+    // is narrow (counts + md5).
+    piiRedactOn(documents(spark, dir)).localCheckpoint().orderBy("doc_id")
+
+  /** Generic core of [[piiRedact]] over any (doc_id, text) relation:
+    * the unexecuted projection, so a plan pin sees the regex kernel
+    * rather than the checkpoint that hides it. */
+  def piiRedactOn(docs: DataFrame): DataFrame = {
+    val emailRe = "[a-zA-Z0-9._%+-]+@[a-zA-Z0-9.-]+\\.[a-zA-Z]{2,}"
+    val phoneRe = "\\+1-555-[0-9]{4}"
+    val salted = docs.select(
       col("doc_id"),
       concat(col("text"),
         lit(" contact user"), col("doc_id"), lit("@example.com or +1-555-"),
@@ -583,8 +588,6 @@ object TextAnalysis {
       regexp_count(col("text"), lit(phoneRe)).cast("bigint").as("n_phones"),
       length(redacted).as("redacted_len"),
       md5(redacted).as("redacted_md5"))
-      .localCheckpoint()
-      .orderBy("doc_id")
   }
 
   /** Strided word-window chunking — the document → context-window

@@ -20,7 +20,7 @@ object Staging {
       compute: => DataFrame): DataFrame = {
     val path = stagedPath(spark, dir, tag)(
       tmpPath => compute.write.mode("overwrite").parquet(tmpPath))
-    spark.read.parquet(path)
+    Tables.parquet(spark, path)
   }
 
   /** The path form, for multi-relation artifacts (an index directory

@@ -2,7 +2,8 @@ package graft.streaming
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import scala.util.control.NonFatal
 
 /** Oracle-checked Structured Streaming queries — the streaming rows
   * of §2.6 driven through the SAME correctness gate as every batch
@@ -82,11 +83,14 @@ object StreamQueries {
   private def replaySession(spark0: SparkSession,
       finalWatermarkFlush: Boolean = true): SparkSession = {
     val s = spark0.newSession()
-    // parameterized (prop/env, local default 8): the deployment's
-    // state parallelism is a per-installation choice, never a
-    // constant tuned to one box
+    // parameterized (the parent session's `graft.replay.partitions`
+    // conf, else the env var, local default 8): the deployment's state
+    // parallelism is a per-installation choice, never a constant tuned
+    // to one box. Read from the PARENT session, not a JVM-global
+    // property, so two replays built concurrently never see each
+    // other's setting.
     s.conf.set("spark.sql.shuffle.partitions",
-      sys.props.get("graft.replay.partitions")
+      spark0.conf.getOption("graft.replay.partitions")
         .orElse(sys.env.get("GRAFT_REPLAY_PARTITIONS")).getOrElse("8"))
     if (!finalWatermarkFlush)
       s.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
@@ -100,7 +104,7 @@ object StreamQueries {
     * plus a micro-precision event-time column for watermarks. */
   private def eventsStream(spark: SparkSession, dir: String): DataFrame = {
     val path = stageStreamDir(spark, dir)
-    val phys = spark.read.parquet(path).schema
+    val phys = Tables.parquetSchema(spark, path)
     spark.readStream.schema(phys).parquet(path)
       .withColumn("ts", Tables.epochNsOf(phys, "ts"))
       .withColumn("ts_ts", expr("timestamp_micros(ts div 1000)"))
@@ -217,19 +221,30 @@ object StreamQueries {
     * self-terminates; the memory-sink rows are localCheckpoint'd so
     * the temp view can be dropped at once (repeated bench runs must
     * not accumulate sink tables on the driver). */
-  private def runBounded(spark: SparkSession, df: DataFrame, mode: String): DataFrame = {
+  private[graft] def runBounded(spark: SparkSession, df: DataFrame, mode: String): DataFrame = {
     val name = s"graft_stream_out_${seq.incrementAndGet()}"
     val ckpt = scratchDir("graft_ckpt_")
     // the scratch checkpoint must not outlive the replay even when the
     // query throws — it lives on RAM-backed tmpfs, so a leak costs
-    // memory, not just inodes (r16, per-ADVICE)
+    // memory, not just inodes (r16, per-ADVICE). What a failure leaves
+    // for diagnosis is the message: the checkpoint path and the last
+    // completed batch's progress.
+    var started: Option[StreamingQuery] = None
     val q =
       try {
         val q0 = df.writeStream.format("memory").queryName(name)
           .option("checkpointLocation", ckpt)
           .outputMode(mode).trigger(Trigger.AvailableNow()).start()
+        started = Some(q0)
         q0.awaitTermination()
         q0
+      } catch {
+        case NonFatal(e) =>
+          val last = started.flatMap(q0 => Option(q0.lastProgress))
+            .map(_.json).getOrElse("none")
+          throw new IllegalStateException(
+            s"bounded replay $name failed (checkpoint $ckpt, deleted); " +
+              s"last progress: $last", e)
       } finally {
         graft.queries.SourcesSinks.deleteRecursively(new java.io.File(ckpt))
       }

@@ -686,6 +686,21 @@ class StreamingSpec extends SparkSpec {
     assert(pairBands.distinct.length == pairBands.length)
   }
 
+  test("a failed bounded replay names its checkpoint dir and still deletes it") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_replay_fail").toFile
+    try {
+      spark.range(3).write.mode("overwrite").parquet(s"$dir/in")
+      val failing = spark.readStream.schema("id long").parquet(s"$dir/in")
+        .select(expr("if(id >= 0, raise_error('planted replay failure'), id)").as("x"))
+      val e = intercept[IllegalStateException](
+        graft.streaming.StreamQueries.runBounded(spark, failing, "append"))
+      val ckpt = "[^\\s,]*graft_ckpt_[^\\s,]*".r.findFirstIn(e.getMessage)
+      assert(ckpt.isDefined, e.getMessage)
+      assert(!new java.io.File(ckpt.get).exists, s"${ckpt.get} left behind")
+      assert(e.getMessage.contains("last progress"), e.getMessage)
+    } finally queries.SourcesSinks.deleteRecursively(dir)
+  }
+
   test("lsh dedup core: planted duplicate collides in all bands, unrelated doc in none") {
     import spark.implicits._
     val base = ("alpha beta gamma " * 20).trim

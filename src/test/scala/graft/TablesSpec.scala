@@ -1,7 +1,10 @@
 package graft
 
 import java.nio.file.Files
+import java.util.concurrent.{CountDownLatch, TimeUnit}
+import java.util.concurrent.atomic.AtomicInteger
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -20,6 +23,106 @@ class TablesSpec extends SparkSpec {
     val d = Files.createTempDirectory("graft_tables_spec").toFile
     d.deleteOnExit()
     d.getAbsolutePath
+  }
+
+  /** Run `body` and count the Spark jobs it started. Listener delivery
+    * is asynchronous, so a marker job run afterwards serves as the
+    * barrier: once its start arrives, every earlier job's has too. */
+  private def jobsDuring[T](body: => T): (T, Int) = {
+    val sc = spark.sparkContext
+    val group = s"tables-spec-${java.util.UUID.randomUUID()}"
+    val marker = s"$group-marker"
+    val jobs = new AtomicInteger(0)
+    val markerSeen = new CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(ev: SparkListenerJobStart): Unit =
+        ev.properties.getProperty("spark.jobGroup.id") match {
+          case `group` => jobs.incrementAndGet()
+          case `marker` => markerSeen.countDown()
+          case _ =>
+        }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "measured", interruptOnCancel = false)
+      val out = try body finally sc.clearJobGroup()
+      sc.setJobGroup(marker, "barrier", interruptOnCancel = false)
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      assert(markerSeen.await(60, TimeUnit.SECONDS), "marker job never reported")
+      (out, jobs.get)
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("a second load of an unchanged table starts no Spark job") {
+    val dir = freshDir()
+    spark.range(5).select(col("id").as("k"), (col("id") * 2).as("v"))
+      .write.mode("overwrite").parquet(s"$dir/t.parquet")
+    // the cold load infers the schema with a job: the counter works
+    val (_, cold) = jobsDuring(Tables.table(spark, dir, "t"))
+    assert(cold >= 1, "cold load should infer the schema with a job")
+    val (df, warm) = jobsDuring(Tables.table(spark, dir, "t"))
+    assert(warm == 0, s"warm load started $warm job(s)")
+    assert(df.count() == 5L)
+  }
+
+  test("overwriting a table with a new schema reloads the new schema and rows") {
+    val dir = freshDir()
+    spark.range(3).select(col("id").as("k"))
+      .write.mode("overwrite").parquet(s"$dir/t.parquet")
+    assert(Tables.table(spark, dir, "t").schema.fieldNames.toSeq == Seq("k"))
+    spark.range(4).select(col("id").as("a"), lit("x").as("b"))
+      .write.mode("overwrite").parquet(s"$dir/t.parquet")
+    val got = Tables.table(spark, dir, "t")
+    assert(got.schema.fieldNames.toSeq == Seq("a", "b"))
+    assert(got.schema("b").dataType === StringType)
+    assert(got.collect().map(_.getLong(0)).sorted.toSeq == Seq(0L, 1L, 2L, 3L))
+  }
+
+  test("a change to a parquet inference conf infers the schema again") {
+    val dir = freshDir()
+    // written without Spark's schema metadata, which would otherwise
+    // decide the type and make the flag moot (as for any non-Spark
+    // writer's files): an un-annotated BINARY column
+    import org.apache.parquet.schema.MessageTypeParser
+    val schema = MessageTypeParser.parseMessageType(
+      "message t { required int64 k; required binary raw; }")
+    val conf = new org.apache.hadoop.conf.Configuration()
+    org.apache.parquet.hadoop.example.GroupWriteSupport.setSchema(schema, conf)
+    val writer = org.apache.parquet.hadoop.example.ExampleParquetWriter
+      .builder(new org.apache.hadoop.fs.Path(s"$dir/t.parquet")).withConf(conf).build()
+    try {
+      val g = new org.apache.parquet.example.data.simple.SimpleGroup(schema)
+      g.add("k", 1L)
+      g.add("raw", org.apache.parquet.io.api.Binary.fromString("ab"))
+      writer.write(g)
+    } finally writer.close()
+    // a session of its own: the shared session's conf stays untouched
+    val s = spark.newSession()
+    assert(Tables.table(s, dir, "t").schema("raw").dataType === BinaryType)
+    s.conf.set("spark.sql.parquet.binaryAsString", "true")
+    val got = Tables.table(s, dir, "t")
+    assert(got.schema("raw").dataType === StringType)
+    assert(got.select("raw").collect().head.getString(0) == "ab")
+  }
+
+  test("a self-join of two loads of one table resolves distinct attributes") {
+    val a = Tables.lineitem(spark, sf)
+    val b = Tables.lineitem(spark, sf)
+    val ids = (df: org.apache.spark.sql.DataFrame) =>
+      df.queryExecution.analyzed.output.map(_.exprId).toSet
+    assert(ids(a).intersect(ids(b)).isEmpty)
+    val joined = a.join(b, a("l_orderkey") === b("l_orderkey")).count()
+    // sum over orders of (lines per order)^2, from a bare read
+    val want = spark.read.parquet(s"$sf/lineitem.parquet")
+      .groupBy("l_orderkey").count()
+      .agg(sum(col("count") * col("count"))).collect().head.getLong(0)
+    assert(joined == want)
+  }
+
+  test("a pinned-schema load plans exactly like a bare parquet read") {
+    val pinned = Tables.lineitem(spark, sf)
+    val bare = spark.read.parquet(s"$sf/lineitem.parquet")
+    assert(Bench.planFingerprint(pinned) == Bench.planFingerprint(bare))
   }
 
   test("events normalizes naive-micros timestamps to epoch-ns longs") {

@@ -206,21 +206,18 @@ class TextSpec extends SparkSpec {
     }
     // the operator is a pure projection: the plan must REQUIRE no
     // shuffle before the sort (no ENSURE_REQUIREMENTS hash exchange).
-    // The one allowed hash exchange is Tables.parallelized's
-    // REPARTITION_BY_NUM fan-out of the single-row-group test input —
-    // an identity at any multi-split layout, so the at-scale
-    // "projection scales embarrassingly" property is unchanged (r15).
-    val plan = df.queryExecution.executedPlan.toString
+    // Pinned on the projection itself, not on piiRedact's output: its
+    // localCheckpoint hides the regex kernel, so a pin there checks
+    // nothing upstream of the checkpoint.
+    val projected = operators.TextAnalysis
+      .piiRedactOn(graft.sources.Tables.documents(spark, sf)).orderBy("doc_id")
+    val plan = projected.queryExecution.executedPlan.toString
+    assert(plan.contains("regexp_replace"), plan.take(2000))
     val required = "Exchange hashpartitioning[^\\n]*ENSURE_REQUIREMENTS".r
     assert(required.findFirstIn(plan).isEmpty, plan.take(2000))
-    // ...and any hash exchange that IS present must be exactly that
-    // fan-out (REPARTITION_BY_NUM), not some other shuffle a future
-    // regression could smuggle in under a different origin tag (r16,
-    // per-ADVICE: the ENSURE_REQUIREMENTS check alone was broader than
-    // the stated intent)
-    "Exchange hashpartitioning[^\\n]*".r.findAllIn(plan).foreach { ex =>
-      assert(ex.contains("REPARTITION_BY_NUM"), ex)
-    }
+    // ...and no hash exchange of any other origin either: the scan
+    // fan-out is gone, so the only exchange is the output sort's range
+    assert(!plan.contains("Exchange hashpartitioning"), plan.take(2000))
   }
 
   test("chunking tiles every document with 48-stride 64-word windows") {
