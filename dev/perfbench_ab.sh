@@ -20,7 +20,10 @@
 # (ties count for neither side), and whether the gain rule holds: at
 # least nine tenths of the pairs won and the medians further apart than
 # the parent's interquartile range. Each run's last stdout line is kept
-# in AB_ROOT/results/<workload>/.
+# in AB_ROOT/results/<workload>/. Last, it prints each side's median CPU
+# seconds per query, over the timed executions recorded in the runs'
+# raw.json, so a change in a gated metric can be traced to the queries
+# that moved it.
 set -euo pipefail
 
 workload=${1:?usage: dev/perfbench_ab.sh <workload> [pairs] [first_seed]}
@@ -70,10 +73,11 @@ for ((i = 0; i < pairs; i++)); do
   else run head "$seed"; run base "$seed"; fi
 done
 
-python3 - "$repo/BENCHMARK.json" "$out" "$seed0" "$pairs" <<'EOF'
+python3 - "$repo/BENCHMARK.json" "$out" "$seed0" "$pairs" "$root" "$workload" <<'EOF'
 import json, statistics, sys
 
 bench, out, seed0, pairs = sys.argv[1], sys.argv[2], int(sys.argv[3]), int(sys.argv[4])
+root, workload = sys.argv[5], sys.argv[6]
 metrics = json.load(open(bench))["end_to_end"]
 
 def load(side, seed):
@@ -116,4 +120,27 @@ for m in metrics:
 print("head/base = ratio of the medians; gain rule = wins >= 0.9 x pairs and the "
       "medians further apart than base q3 - q1; bound = the median's relative "
       "worsening against BENCHMARK.json's bound")
+
+# per query: the timed executions ("p…" ids) of every run of a side
+def query_cpu(side):
+    out = {}
+    for i in range(pairs):
+        path = f"{root}/{side}/perfbench/.work/runs/{workload}_seed{seed0 + i}_trace0/raw.json"
+        try:
+            raw = json.load(open(path))
+        except (OSError, ValueError):
+            continue
+        for q in raw["queries"]:
+            if q["id"].startswith("p") and q["error"] is None:
+                out.setdefault(q["name"], []).append(q["cpu_s"])
+    return out
+
+qb, qh = query_cpu("base"), query_cpu("head")
+print(f"\n{'query cpu_s':30s} {'base n/median':>16s} {'head n/median':>16s} {'head/base':>9s}")
+for name in sorted(set(qb) | set(qh)):
+    b, h = qb.get(name, []), qh.get(name, [])
+    mb = statistics.median(b) if b else float("nan")
+    mh = statistics.median(h) if h else float("nan")
+    ratio = mh / mb if b and h and mb > 0 else float("nan")
+    print(f"{name:30s} {len(b):5d}/{mb:10.3f} {len(h):5d}/{mh:10.3f} {ratio:9.3f}")
 EOF

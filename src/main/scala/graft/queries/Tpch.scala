@@ -35,8 +35,14 @@ import graft.sources.Tables._
   * Determinism/oracle notes: all money columns hold exact 2-decimal
   * values, so aggregation is done on DECIMAL (exact, association-
   * order independent) and results are cast back to DOUBLE, which is
-  * bit-identical across Spark and DuckDB. Timestamp outputs are cast
-  * to DATE. Every query ends with a total ORDER BY.
+  * bit-identical across Spark and DuckDB. The double → DECIMAL(18,2)
+  * casts run on graft.functions.ExactDecimalCast, which
+  * ExactDecimalCastRule puts in place of every double → DECIMAL(p ≤ 18)
+  * cast: it returns the long r = rint(d·10^s) when |r| < min(10^p,
+  * 2^53), r / 10^s == d and ulp(d)·10^s < 0.5 — the value Spark's cast
+  * gives — and otherwise evaluates the original cast, so values, nulls
+  * and errors are Spark's own. Timestamp outputs are cast to DATE.
+  * Every query ends with a total ORDER BY.
   */
 object Tpch {
   private val D = DecimalType(18, 2)

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, Dataset, Encoders}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, ListState, MapState, OutputMode, StatefulProcessor, TTLConfig, TimeMode, TimerValues, ValueState}
 
+import graft.functions.ExactDecimalCast
+
 /** Structured Streaming pipelines over the events stream — the
   * streaming side of §2.6 (Analytic.tumblingWindow / sessionize are
   * the batch analogs the driver oracle-checks; these are the
@@ -160,13 +162,8 @@ object EventStream {
           st.n_events + 1,
           st.n_purchases + (if (e.event_type == "purchase") 1L else 0L),
           if (st.types.contains(e.event_type)) st.types else e.event_type :: st.types,
-          // HALF_UP on the decimal string repr — the exact arithmetic
-          // of the batch twin's DECIMAL(18,2) cast (math.round would
-          // round -0.5 cents toward +Inf and break parity on negative
-          // values ending in an exact half-cent)
-          st.total_cents + java.math.BigDecimal.valueOf(e.value)
-            .setScale(2, java.math.RoundingMode.HALF_UP)
-            .movePointRight(2).longValueExact(),
+          // the batch twin's DECIMAL(18,2) cast, in cents
+          st.total_cents + ExactDecimalCast.halfUpUnscaled(e.value, 2),
           math.min(st.first_sec, sec),
           math.max(st.last_sec, sec))
       }
@@ -361,10 +358,8 @@ object EventStream {
 
     private def close(userId: Long, st: UserState): SessionOut =
       SessionOut(userId, st.counter + 1, st.n, st.startSec, st.lastSec,
-        // HALF_UP, matching the batch twin's DECIMAL(18,2) sum (see
-        // UserStatsProcessor for why math.round breaks on negatives)
-        java.math.BigDecimal.valueOf(st.value)
-          .setScale(2, java.math.RoundingMode.HALF_UP).doubleValue())
+        // rounded to cents as the batch twin's DECIMAL(18,2) cast rounds
+        ExactDecimalCast.halfUpUnscaled(st.value, 2) / 100.0)
 
     override def handleInputRows(key: Long, rows: Iterator[Ev],
         timerValues: TimerValues): Iterator[SessionOut] = {
@@ -423,10 +418,8 @@ object EventStream {
 
     def close(userId: Long, st: UserState): SessionOut =
       SessionOut(userId, st.counter + 1, st.n, st.startSec, st.lastSec,
-        // HALF_UP, matching the batch twin's DECIMAL(18,2) sum (see
-        // UserStatsProcessor for why math.round breaks on negatives)
-        java.math.BigDecimal.valueOf(st.value)
-          .setScale(2, java.math.RoundingMode.HALF_UP).doubleValue())
+        // rounded to cents as the batch twin's DECIMAL(18,2) cast rounds
+        ExactDecimalCast.halfUpUnscaled(st.value, 2) / 100.0)
 
     def fn(userId: Long, evs: Iterator[Ev], state: GroupState[UserState]): Iterator[SessionOut] = {
       if (evs.isEmpty && state.hasTimedOut) {

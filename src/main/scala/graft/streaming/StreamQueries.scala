@@ -80,9 +80,12 @@ object StreamQueries {
     * and the replay specs hold either way, and an unbounded
     * deployment keeps the default — there the no-data batch is what
     * caps emit latency on an idle feed). */
-  private def replaySession(spark0: SparkSession,
+  private[graft] def replaySession(spark0: SparkSession,
       finalWatermarkFlush: Boolean = true): SparkSession = {
     val s = spark0.newSession()
+    // a new session has an empty function registry and no extra
+    // optimizer rules; the stream clones this one per micro-batch
+    org.apache.spark.sql.GraftFunctions.register(s)
     // parameterized (the parent session's `graft.replay.partitions`
     // conf, else the env var, local default 8): the deployment's state
     // parallelism is a per-installation choice, never a constant tuned
@@ -138,8 +141,7 @@ object StreamQueries {
         java.nio.file.Files.createSymbolicLink(link,
           java.nio.file.Paths.get(s"$dir/documents.parquet"))
       }
-      val phys = spark.read.parquet(d).schema
-      spark.readStream.schema(phys).parquet(d)
+      spark.readStream.schema(Tables.parquetSchema(spark, d)).parquet(d)
     }
 
   /** Per-ROW MinHash signatures — the whole text → normalize →
@@ -186,11 +188,8 @@ object StreamQueries {
     * batch band join bit-for-bit. */
   def lshDedup(spark0: SparkSession, dir: String): DataFrame = {
     val spark = replaySession(spark0, finalWatermarkFlush = false)
-    // the fresh child session has a fresh function registry; the
-    // native signature kernel must be registered on THIS session
-    org.apache.spark.sql.GraftFunctions.register(spark)
     val joined = lshDedupOn(docsStream(spark, dir),
-      spark.read.parquet(s"$dir/documents.parquet")
+      Tables.parquet(spark, s"$dir/documents.parquet")
         .filter(col("doc_id") % 2 === 0))
     runBounded(spark, joined, "append")
       .orderBy("doc_id", "ref_id", "band")
@@ -230,33 +229,21 @@ object StreamQueries {
     // for diagnosis is the message: the checkpoint path and the last
     // completed batch's progress.
     var started: Option[StreamingQuery] = None
-    val q =
-      try {
-        val q0 = df.writeStream.format("memory").queryName(name)
-          .option("checkpointLocation", ckpt)
-          .outputMode(mode).trigger(Trigger.AvailableNow()).start()
-        started = Some(q0)
-        q0.awaitTermination()
-        q0
-      } catch {
-        case NonFatal(e) =>
-          val last = started.flatMap(q0 => Option(q0.lastProgress))
-            .map(_.json).getOrElse("none")
-          throw new IllegalStateException(
-            s"bounded replay $name failed (checkpoint $ckpt, deleted); " +
-              s"last progress: $last", e)
-      } finally {
-        graft.queries.SourcesSinks.deleteRecursively(new java.io.File(ckpt))
-      }
-    // dev-only timing breakdown (never set by the driver): per-batch
-    // durationMs from the progress log, to locate micro-batch overhead
-    if (sys.env.contains("GRAFT_STREAM_PROFILE")) {
-      q.recentProgress.foreach { p =>
-        val d = p.durationMs
-        System.err.println(s"[streamprof] $name batch=${p.batchId} rows=${p.numInputRows} " +
-          scala.jdk.CollectionConverters.MapHasAsScala(d).asScala.toSeq.sortBy(_._1)
-            .map { case (k, v) => s"$k=$v" }.mkString(" "))
-      }
+    try {
+      val q = df.writeStream.format("memory").queryName(name)
+        .option("checkpointLocation", ckpt)
+        .outputMode(mode).trigger(Trigger.AvailableNow()).start()
+      started = Some(q)
+      q.awaitTermination()
+    } catch {
+      case NonFatal(e) =>
+        val last = started.flatMap(q => Option(q.lastProgress))
+          .map(_.json).getOrElse("none")
+        throw new IllegalStateException(
+          s"bounded replay $name failed (checkpoint $ckpt, deleted); " +
+            s"last progress: $last", e)
+    } finally {
+      graft.queries.SourcesSinks.deleteRecursively(new java.io.File(ckpt))
     }
     val out = spark.table(name).localCheckpoint(true)
     spark.catalog.dropTempView(name)
@@ -484,7 +471,7 @@ object StreamQueries {
   private[streaming] final class ChaosFileFeed(dir: String) extends EventFeed {
     def stream(spark: SparkSession): DataFrame = {
       val path = stageChaosDir(spark, dir)
-      val phys = spark.read.parquet(s"$dir/events.parquet").schema
+      val phys = Tables.parquetSchema(spark, s"$dir/events.parquet")
       spark.readStream.schema(phys)
         .option("maxFilesPerTrigger", "1").parquet(path)
         .withColumn("ts", Tables.epochNsOf(phys, "ts"))
@@ -541,7 +528,7 @@ object StreamQueries {
   def lateDrop(spark0: SparkSession, dir: String): DataFrame = {
     val spark = replaySession(spark0, finalWatermarkFlush = false)
     val path = stageLateDir(spark, dir)
-    val phys = spark.read.parquet(s"$dir/events.parquet").schema
+    val phys = Tables.parquetSchema(spark, s"$dir/events.parquet")
     val stream = spark.readStream.schema(phys)
       .option("maxFilesPerTrigger", "1").parquet(path)
       .withColumn("ts", Tables.epochNsOf(phys, "ts"))
@@ -724,7 +711,7 @@ object StreamQueries {
   def upsertSink(spark0: SparkSession, dir: String): DataFrame = {
     val spark = replaySession(spark0)
     val path = stageUpsertDir(spark, dir)
-    val phys = spark.read.parquet(s"$dir/events.parquet").schema
+    val phys = Tables.parquetSchema(spark, s"$dir/events.parquet")
     val stream = spark.readStream.schema(phys)
       .option("maxFilesPerTrigger", "1").parquet(path)
       .withColumn("ns", Tables.epochNsOf(phys, "ts"))
@@ -835,12 +822,6 @@ object StreamQueries {
     * never a rebuild, never corpus×corpus. */
   def graphMaintain(spark0: SparkSession, dir: String): DataFrame = {
     val spark = replaySession(spark0)
-    // the replay session is a FRESH newSession (empty function
-    // registry): register the native kernels explicitly — riding on
-    // Tables access is not enough, because the arrivals staging is
-    // marker-guarded and a SECOND invocation skips it (measured:
-    // run 2 failed analysis on graft_dot in the micro-batch clone)
-    org.apache.spark.sql.GraftFunctions.register(spark)
     val path = stageGraphArrivalsDir(spark, dir)
     // schema from the STAGED files (canonical Tables.embeddings
     // types), not the raw table — the staging wrote canonicalized
@@ -903,15 +884,13 @@ object StreamQueries {
     * join expressed fully in batch. */
   def staticEnrich(spark0: SparkSession, dir: String): DataFrame = {
     val spark = replaySession(spark0, finalWatermarkFlush = false)
-    val phys = spark.read.parquet(s"$dir/events.parquet").schema
     // the dimension snapshot: per-user lifetime event tier, computed
     // batch-side from the same landing data a real dim table would
     // be. Tiers are RELATIVE to the corpus mean (cross-multiplied, so
     // the comparison is exact integer): ≥5% above mean = heavy,
     // ≥ mean = mid — absolute thresholds would collapse to one tier
     // as the per-user volume scales with sf
-    val perUser = spark.read
-      .parquet(stageStreamDir(spark, dir) + "/events.parquet")
+    val perUser = Tables.parquet(spark, stageStreamDir(spark, dir) + "/events.parquet")
       .groupBy("user_id").agg(count(lit(1)).as("n_life"))
     val totals = perUser.agg(sum("n_life").as("total"),
       count(lit(1)).as("n_users"))

@@ -4,7 +4,15 @@ import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
 /** Registers graft's native Catalyst expressions on a session's own
-  * function registry.
+  * function registry, and graft's optimizer rule on its experimental
+  * methods: [[graft.functions.ExactDecimalCastRule]], which turns every
+  * double → DECIMAL(p ≤ 18, s) cast into a long-backed
+  * [[graft.functions.ExactDecimalCast]]. That node returns the long
+  * r = rint(d·10^s) when |r| < min(10^p, 2^53), r / 10^s == d and
+  * ulp(d)·10^s < 0.5 — then r is exactly the value Spark's cast gives —
+  * and otherwise evaluates the original cast, so values, nulls and
+  * errors do not change. A session built with `newSession()` starts without
+  * either, so every session graft plans on must pass through here.
   *
   * Lives in the org.apache.spark.sql package because sessionState is
   * private[sql]: the driver hands us an already-built SparkSession,
@@ -88,6 +96,11 @@ object GraftFunctions {
           requireArity("graft_minhash_sig", exprs, 1)
           graft.functions.MinHashSig(exprs.head).toAggregateExpression()
         })
+    }
+    val methods = spark.sessionState.experimentalMethods
+    methods.synchronized {
+      if (!methods.extraOptimizations.contains(graft.functions.ExactDecimalCastRule))
+        methods.extraOptimizations :+= graft.functions.ExactDecimalCastRule
     }
   }
 }

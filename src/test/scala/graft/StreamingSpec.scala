@@ -717,4 +717,76 @@ class StreamingSpec extends SparkSpec {
     assert(byDoc(1L).forall(_.getAs[Long]("ref_id") == 100L))
     assert(!byDoc.contains(2L), "unrelated doc must not collide")
   }
+
+  test("a replay session's micro-batch plan casts through the exact decimal kernel") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_replay_cast").toFile
+    val s = graft.streaming.StreamQueries.replaySession(spark, finalWatermarkFlush = false)
+    val name = "graft_replay_cast_out"
+    try {
+      spark.range(100).select((col("id") % 7).as("k"), (col("id") / 4.0).as("value"))
+        .write.parquet(s"$dir/in")
+      val q = s.readStream.schema("k long, value double").parquet(s"$dir/in")
+        .groupBy("k").agg(sum(col("value").cast("decimal(18,2)")).as("s"))
+        .writeStream.format("memory").queryName(name)
+        .option("checkpointLocation", s"$dir/ckpt").outputMode("complete")
+        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
+      q.awaitTermination()
+      val plan = q.asInstanceOf[org.apache.spark.sql.execution.streaming.runtime
+        .StreamingQueryWrapper].streamingQuery.lastExecution.optimizedPlan
+      assert(plan.exists(_.expressions.exists(
+        _.exists(_.isInstanceOf[graft.functions.ExactDecimalCast]))), plan.toString)
+      assert(s.table(name).agg(sum("s")).head().getDecimal(0) ==
+        new java.math.BigDecimal("1237.50"))
+    } finally {
+      s.catalog.dropTempView(name)
+      queries.SourcesSinks.deleteRecursively(dir)
+    }
+  }
+
+  test("a second build of the docs-stream row starts no Parquet schema job") {
+    import java.util.concurrent.{CountDownLatch, TimeUnit}
+    import java.util.concurrent.atomic.AtomicInteger
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val dir = java.nio.file.Files.createTempDirectory("graft_docs_stream").toFile
+    java.nio.file.Files.copy(java.nio.file.Paths.get(s"$sf/documents.parquet"),
+      dir.toPath.resolve("documents.parquet"))
+    // a schema job as perfbench tells one apart: a job whose call site
+    // is `parquet at …`, here reached from docsStream
+    def schemaJobs(body: => Unit): Int = {
+      val sc = spark.sparkContext
+      val marker = s"streaming-spec-${java.util.UUID.randomUUID()}"
+      val jobs = new AtomicInteger(0)
+      val markerSeen = new CountDownLatch(1)
+      val listener = new SparkListener {
+        override def onJobStart(ev: SparkListenerJobStart): Unit =
+          if (Option(ev.properties).exists(_.getProperty("spark.jobGroup.id") == marker))
+            markerSeen.countDown()
+          else if (ev.stageInfos.nonEmpty) {
+            val last = ev.stageInfos.maxBy(_.stageId)
+            if (last.name.startsWith("parquet at ") &&
+                last.details.contains("StreamQueries$.docsStream(")) jobs.incrementAndGet()
+          }
+      }
+      sc.addSparkListener(listener)
+      try {
+        body
+        // listener delivery is asynchronous: once the marker job's
+        // start arrives, every earlier job's has too
+        sc.setJobGroup(marker, "barrier", interruptOnCancel = false)
+        try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+        assert(markerSeen.await(60, TimeUnit.SECONDS), "marker job never reported")
+        jobs.get
+      } finally sc.removeSparkListener(listener)
+    }
+    try {
+      var first, second = Set.empty[String]
+      assert(schemaJobs {
+        first = rowSet(graft.streaming.StreamQueries.lshDedup(spark, dir.toString))
+      } >= 1, "the cold build infers the staged docs schema")
+      assert(schemaJobs {
+        second = rowSet(graft.streaming.StreamQueries.lshDedup(spark, dir.toString))
+      } == 0)
+      assert(second == first)
+    } finally queries.SourcesSinks.deleteRecursively(dir)
+  }
 }
