@@ -1,5 +1,5 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{GraftFunctions, SparkSession}
 import scala.util.control.NonFatal
 
 /** Benchmark main: runs every SparkEntry query on
@@ -220,12 +220,9 @@ object Bench {
     // estimates, so hashing the main session's plans would make a
     // fingerprint depend on suite order and scratch-file bytes
     // rather than on code.
-    lazy val fpSession = {
-      val s = spark.newSession()
-      s.conf.set("spark.sql.optimizer.runtime.bloomFilter.enabled", "false")
-      s.conf.set("spark.sql.optimizer.dynamicPartitionPruning.enabled", "false")
-      s
-    }
+    lazy val fpSession = GraftFunctions.childSession(spark,
+      "spark.sql.optimizer.runtime.bloomFilter.enabled" -> "false",
+      "spark.sql.optimizer.dynamicPartitionPruning.enabled" -> "false")
     def fpsAt(names: Seq[String], dir: String): Map[String, String] =
       names.flatMap { n =>
         try Some(n -> planFingerprint(SparkEntry.queries(n)(fpSession, dir)))

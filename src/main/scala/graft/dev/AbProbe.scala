@@ -6,7 +6,7 @@ package graft.dev
 // single session and reports per-pair ratios, which cancels ambient
 // drift to first order. Variants are declared inline (copies of the
 // production shape with exactly one structural difference).
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftFunctions, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -180,11 +180,8 @@ object AbProbe {
     type Q = (SparkSession, String) => DataFrame
     // each variant builds on its own session carrying its partition
     // count, which replaySession reads from the parent session's conf
-    def withParts(n: String, q: Q): Q = (s, d) => {
-      val own = s.newSession()
-      own.conf.set("graft.replay.partitions", n)
-      q(own, d)
-    }
+    def withParts(n: String, q: Q): Q = (s, d) =>
+      q(GraftFunctions.childSession(s, "graft.replay.partitions" -> n), d)
     def parts84(name: String): (Q, Q) = {
       val q = graft.SparkEntry.queries(name)
       (withParts("8", q), withParts("4", q))

@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftFunctions, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
@@ -484,7 +484,7 @@ object Analytic {
     * row_number ≤ k. Keys here are the handful of order statuses —
     * inside the operator's bounded-keys contract. */
   def topkRewrite(spark0: SparkSession, dir: String): DataFrame = {
-    val s = spark0.newSession()
+    val s = GraftFunctions.childSession(spark0)
     graft.plans.GraftOptimizations.install(s)
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy("o_orderstatus")

@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftFunctions, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 import graft.sources.Tables._
@@ -125,11 +125,11 @@ object Scans {
     * 10 GB production default) and pins a shuffle join, and those
     * knobs must not leak into other queries' planning. */
   def bloomFilteredJoin(spark: SparkSession, dir: String): DataFrame = {
-    val s = spark.newSession()
-    s.conf.set("spark.sql.optimizer.runtime.bloomFilter.enabled", "true")
-    s.conf.set("spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold", "0")
-    s.conf.set("spark.sql.optimizer.runtime.bloomFilter.creationSideThreshold", "256MB")
-    s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    val s = GraftFunctions.childSession(spark,
+      "spark.sql.optimizer.runtime.bloomFilter.enabled" -> "true",
+      "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold" -> "0",
+      "spark.sql.optimizer.runtime.bloomFilter.creationSideThreshold" -> "256MB",
+      "spark.sql.autoBroadcastJoinThreshold" -> "-1")
     val urgent = orders(s, dir).filter(col("o_orderpriority") === "1-URGENT")
     lineitem(s, dir)
       .join(urgent, col("l_orderkey") === col("o_orderkey"))
@@ -152,10 +152,10 @@ object Scans {
     * Runs on a child session so the DSv2/pushdown confs never leak
     * into sibling queries. */
   def aggPushdown(spark0: SparkSession, dir: String): DataFrame = {
-    val spark = spark0.newSession()
-    spark.conf.set("spark.sql.parquet.aggregatePushdown", "true")
-    // aggregate pushdown exists only on the DSv2 read path
-    spark.conf.set("spark.sql.sources.useV1SourceList", "")
+    val spark = GraftFunctions.childSession(spark0,
+      "spark.sql.parquet.aggregatePushdown" -> "true",
+      // aggregate pushdown exists only on the DSv2 read path
+      "spark.sql.sources.useV1SourceList" -> "")
     spark.read.parquet(s"$dir/orders.parquet")
       .agg(count(lit(1)).as("n_rows"),
         min("o_orderkey").as("min_okey"), max("o_orderkey").as("max_okey"),

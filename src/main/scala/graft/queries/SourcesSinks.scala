@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, GraftFunctions, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.sources.Tables._
@@ -703,8 +703,7 @@ object SourcesSinks {
     * session with broadcast disabled so the demo can't degrade into
     * a broadcast join silently. */
   def bucketedJoin(spark0: SparkSession, dir: String): DataFrame = {
-    val s = spark0.newSession()
-    s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    val s = GraftFunctions.childSession(spark0, "spark.sql.autoBroadcastJoinThreshold" -> "-1")
     val tag = s.sparkContext.applicationId.replaceAll("[^a-zA-Z0-9]", "_") +
       "_" + math.abs(dir.hashCode)
     val custT = s"graft_cust_b_$tag"
@@ -891,9 +890,9 @@ object SourcesSinks {
 
   def recordFilter(spark0: SparkSession, dir: String): DataFrame = {
     val path = recordFilterLayout(spark0, dir)
-    val s = spark0.newSession()
-    s.conf.set("spark.sql.parquet.enableVectorizedReader", "false")
-    s.conf.set("spark.sql.parquet.recordLevelFilter.enabled", "true")
+    val s = GraftFunctions.childSession(spark0,
+      "spark.sql.parquet.enableVectorizedReader" -> "false",
+      "spark.sql.parquet.recordLevelFilter.enabled" -> "true")
     recordFilterRead(s, path)
   }
 

@@ -56,15 +56,18 @@ object StreamQueries {
     java.nio.file.Files.createTempDirectory(root, prefix).toString
   }
 
-  /** Child session sized for the bounded replay. The state-store
+  /** Child session sized for the bounded replay, opened through
+    * [[org.apache.spark.sql.GraftFunctions.childSession]], so every
+    * replay reuses the code earlier replays compiled. The state-store
     * instance count of every stateful operator equals
     * spark.sql.shuffle.partitions AT STREAM START — it is the
     * stream's state layout, fixed per deployment, not a planner
     * choice. The batch surface keeps the session's 32; a replay over
     * one bounded file is right-sized at 8 (measured: the interval
     * join's per-batch store commit overhead drops 6.0→2.5 s steady
-    * at sf0.1, values identical). A 100 TB deployment sets this to
-    * its own state parallelism; nothing else here changes.
+    * at sf0.1, values identical). A 100 TB deployment sets the parent
+    * session's `graft.replay.partitions` conf to its own state
+    * parallelism (default 8); nothing else here changes.
     *
     * `finalWatermarkFlush = false` additionally disables the no-data
     * micro-batch (r16, guide §1/§5: the zero-row batch costs ~0.9 s
@@ -82,22 +85,14 @@ object StreamQueries {
     * caps emit latency on an idle feed). */
   private[graft] def replaySession(spark0: SparkSession,
       finalWatermarkFlush: Boolean = true): SparkSession = {
-    val s = spark0.newSession()
-    // a new session has an empty function registry and no extra
-    // optimizer rules; the stream clones this one per micro-batch
-    org.apache.spark.sql.GraftFunctions.register(s)
-    // parameterized (the parent session's `graft.replay.partitions`
-    // conf, else the env var, local default 8): the deployment's state
-    // parallelism is a per-installation choice, never a constant tuned
-    // to one box. Read from the PARENT session, not a JVM-global
-    // property, so two replays built concurrently never see each
-    // other's setting.
-    s.conf.set("spark.sql.shuffle.partitions",
-      spark0.conf.getOption("graft.replay.partitions")
-        .orElse(sys.env.get("GRAFT_REPLAY_PARTITIONS")).getOrElse("8"))
-    if (!finalWatermarkFlush)
-      s.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
-    s
+    // read from the PARENT session, not a JVM-global property, so two
+    // replays built concurrently never see each other's setting
+    val parts = "spark.sql.shuffle.partitions" ->
+      spark0.conf.getOption("graft.replay.partitions").getOrElse("8")
+    val noData =
+      if (finalWatermarkFlush) Nil
+      else Seq("spark.sql.streaming.noDataMicroBatches.enabled" -> "false")
+    org.apache.spark.sql.GraftFunctions.childSession(spark0, (parts +: noData): _*)
   }
 
   /** The events stream: schema pinned from the batch footer (schema

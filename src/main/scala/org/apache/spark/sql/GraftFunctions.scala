@@ -12,7 +12,8 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
   * ulp(d)·10^s < 0.5 — then r is exactly the value Spark's cast gives —
   * and otherwise evaluates the original cast, so values, nulls and
   * errors do not change. A session built with `newSession()` starts without
-  * either, so every session graft plans on must pass through here.
+  * either, so every session graft plans on must pass through here; every
+  * child session graft opens comes from [[childSession]], which does.
   *
   * Lives in the org.apache.spark.sql package because sessionState is
   * private[sql]: the driver hands us an already-built SparkSession,
@@ -34,6 +35,33 @@ object GraftFunctions {
   private def requireArity(fn: String, exprs: Seq[Expression], n: Int): Unit =
     if (exprs.length != n) throw new IllegalArgumentException(
       s"$fn expects exactly $n argument(s), got ${exprs.length}")
+
+  /** A child session of `parent` for a query that needs its own confs:
+    * artifact isolation off, graft's functions and optimizer rule
+    * registered, then `conf` applied, in that order.
+    *
+    * Isolation is off because graft never adds jars, files or classes
+    * to a session, so it buys nothing, and it costs a recompile: with
+    * `spark.sql.artifact.isolation.enabled` on (Spark's default) every
+    * session's tasks, and every stream's per-start `cloneSession()`,
+    * run under a fresh `ExecutorClassLoader`, and the compiled-class
+    * cache is keyed by class loader, so each child session would compile
+    * all its generated code again. With it off, the tasks run in the
+    * executor's default session state and reuse the classes every
+    * earlier child session compiled.
+    *
+    * The order matters. Spark reads the isolation conf once, lazily,
+    * the first time the session's artifact state is used, so it is set
+    * before anything else touches the session; a stream's clone copies
+    * it. The caller's confs come last, so a caller can still turn
+    * isolation back on. */
+  def childSession(parent: SparkSession, conf: (String, String)*): SparkSession = {
+    val s = parent.newSession()
+    s.conf.set("spark.sql.artifact.isolation.enabled", "false")
+    register(s)
+    conf.foreach { case (k, v) => s.conf.set(k, v) }
+    s
+  }
 
   def register(spark: SparkSession): Unit = {
     val registry = spark.sessionState.functionRegistry

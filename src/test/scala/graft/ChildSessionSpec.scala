@@ -1,0 +1,52 @@
+package graft
+
+import org.apache.spark.sql.{AnalysisException, GraftFunctions}
+import org.apache.spark.sql.functions._
+
+/** `GraftFunctions.childSession`: the caller's confs land on the child
+  * and not on the parent, graft's functions resolve in the child, and
+  * a stream's per-start clone of a replay session keeps artifact
+  * isolation off. */
+class ChildSessionSpec extends SparkSpec {
+  private val Isolation = "spark.sql.artifact.isolation.enabled"
+
+  test("a child session carries the caller's confs and leaves the parent's alone") {
+    val keys = Seq("spark.sql.autoBroadcastJoinThreshold", "graft.replay.partitions", Isolation)
+    val parentBefore = keys.map(spark.conf.getOption)
+    val s = GraftFunctions.childSession(spark,
+      "spark.sql.autoBroadcastJoinThreshold" -> "-1", "graft.replay.partitions" -> "3")
+    assert(s ne spark)
+    assert(keys.map(s.conf.get) == Seq("-1", "3", "false"))
+    assert(keys.map(spark.conf.getOption) == parentBefore)
+    // a caller's conf has the last word, isolation included
+    assert(GraftFunctions.childSession(spark, Isolation -> "true").conf.get(Isolation) == "true")
+  }
+
+  test("graft_dot resolves in a child session and not in a bare new session") {
+    val q = "SELECT graft_dot(array(1.0D, 2.0D), array(3.0D, 4.0D))"
+    assert(GraftFunctions.childSession(spark).sql(q).head().getDouble(0) == 11.0)
+    intercept[AnalysisException](spark.newSession().sql(q))
+  }
+
+  test("a replay's micro-batch session reads artifact isolation off") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_child_session").toFile
+    val s = graft.streaming.StreamQueries.replaySession(spark)
+    val name = "graft_child_session_out"
+    try {
+      spark.range(10).select(col("id").as("k")).write.parquet(s"$dir/in")
+      val q = s.readStream.schema("k long").parquet(s"$dir/in")
+        .writeStream.format("memory").queryName(name)
+        .option("checkpointLocation", s"$dir/ckpt")
+        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
+      q.awaitTermination()
+      val batch = q.asInstanceOf[org.apache.spark.sql.execution.streaming.runtime
+        .StreamingQueryWrapper].streamingQuery.lastExecution.sparkSession
+      assert(batch ne s, "the micro-batch session is the stream's clone")
+      assert(batch.conf.get(Isolation) == "false")
+      assert(s.table(name).count() == 10)
+    } finally {
+      s.catalog.dropTempView(name)
+      queries.SourcesSinks.deleteRecursively(dir)
+    }
+  }
+}

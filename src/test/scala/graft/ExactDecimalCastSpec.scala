@@ -135,6 +135,13 @@ class ExactDecimalCastSpec extends SparkSpec {
     }
   }
 
+  test("plan pin: scan_record_filter's child session casts through the exact kernel") {
+    val df = SparkEntry.queries("scan_record_filter")(spark, sf)
+    val plan = df.queryExecution.optimizedPlan.toString
+    assert(plan.contains("graft_exact_decimal"), plan)
+    assert(doubleToDecimalCasts(df).isEmpty, plan)
+  }
+
   test("rows are identical under whole-stage codegen and NO_CODEGEN") {
     val dir = java.nio.file.Files.createTempDirectory("graft_exact_decimal").toString
     val rng = new java.util.Random(3L)

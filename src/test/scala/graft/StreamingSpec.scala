@@ -789,4 +789,19 @@ class StreamingSpec extends SparkSpec {
       assert(second == first)
     } finally queries.SourcesSinks.deleteRecursively(dir)
   }
+
+  test("a second stream_tumbling_agg replay compiles no generated class") {
+    import org.apache.spark.metrics.source.CodegenMetrics
+    // one count per Janino compile, driver and local executor alike
+    def compiled[T](body: => T): (T, Long) = {
+      val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      val out = body
+      (out, CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before)
+    }
+    val replay = SparkEntry.queries("stream_tumbling_agg")
+    val warm = replay(spark, sf).collect()
+    val (again, n) = compiled(replay(spark, sf).collect())
+    assert(n == 0, s"the second replay compiled $n classes")
+    assert(again.toSeq == warm.toSeq)
+  }
 }
