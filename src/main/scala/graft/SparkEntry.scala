@@ -412,14 +412,6 @@ object SparkEntry {
         .orderBy("p_brand", "rank"))
   )
 
-  /** Queries with NO DuckDB oracle (the driver's weaker rows-only
-    * check, SURVEY §2's R class). Empty since round 9: the one
-    * candidate (expr_hash_crc — DuckDB has no crc32/xxhash64) now
-    * verifies against the published known-answer vectors instead, so
-    * every query carries a value-checked oracle.
-    * DocsSpec enforces queries = oracleSql ∪ rowsOnly. */
-  val rowsOnly: Set[String] = Set.empty
-
   /** DuckDB-runnable oracle SQL, one per `queries` key (same column
     * names, same ORDER BY — the driver hash-compares values).
     * ann_ivf_indexed serves from the staged parquet index but must

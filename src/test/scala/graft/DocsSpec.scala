@@ -36,11 +36,9 @@ class DocsSpec extends AnyFunSuite {
       fail(s"$f contains drift-prone count phrasing '$hit'")
   }
 
-  test("queries = oracleSql plus the declared rows-only set, with no overlap") {
+  test("queries = oracleSql, key for key") {
     val q = SparkEntry.queries.keySet
     val o = SparkEntry.oracleSql.keySet
-    val r = SparkEntry.rowsOnly
-    assert(o ++ r == q && (o & r).isEmpty,
-      s"only-in-queries=${q -- o -- r} only-in-oracle=${o -- q} overlap=${o & r}")
+    assert(o == q, s"only-in-queries=${q -- o} only-in-oracle=${o -- q}")
   }
 }

@@ -701,6 +701,40 @@ class StreamingSpec extends SparkSpec {
     } finally queries.SourcesSinks.deleteRecursively(dir)
   }
 
+  test("a failed versioned replay names its checkpoint and state dirs and deletes both") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_versioned_fail").toFile
+    try {
+      spark.range(3).write.mode("overwrite").parquet(s"$dir/in")
+      val stream = spark.readStream.schema("id long").parquet(s"$dir/in")
+      val e = intercept[IllegalStateException](
+        graft.streaming.StreamQueries.replayVersioned(stream, "graft_fail_state")(
+          (_, _) => throw new RuntimeException("planted batch failure"))(spark.read.parquet(_)))
+      for (tag <- Seq("graft_ckpt_", "graft_fail_state")) {
+        val p = s"[^\\s,]*$tag[^\\s,]*".r.findFirstIn(e.getMessage)
+        assert(p.isDefined, e.getMessage)
+        assert(!new java.io.File(p.get).exists, s"${p.get} left behind")
+      }
+      assert(e.getMessage.contains("last progress"), e.getMessage)
+    } finally queries.SourcesSinks.deleteRecursively(dir)
+  }
+
+  test("the late replay's landing dir holds its three slices at fixed mtimes, staged once") {
+    graft.streaming.StreamQueries.lateDrop(spark, sf).collect()
+    val d = new java.io.File(queries.SourcesSinks.tmp(spark, sf, "events_stream_late"))
+    def listing: Map[String, Long] = d.listFiles().map(f => f.getName -> f.lastModified).toMap
+    val first = listing
+    val t0 = 1600000000000L
+    // the file source orders the backlog by mtime: on-time, tick, late
+    assert(first - "_STAGED" == Map("a_ontime.parquet" -> t0,
+      "c_tick.parquet" -> (t0 + 60000), "d_late.parquet" -> (t0 + 120000)), first)
+    assert(first.contains("_STAGED"), first)
+    val strays = d.getParentFile.listFiles().map(_.getName)
+      .filter(n => n.startsWith(d.getName) && n != d.getName)
+    assert(strays.isEmpty, strays.mkString(", "))
+    graft.streaming.StreamQueries.lateDrop(spark, sf).collect()
+    assert(listing == first)
+  }
+
   test("lsh dedup core: planted duplicate collides in all bands, unrelated doc in none") {
     import spark.implicits._
     val base = ("alpha beta gamma " * 20).trim
@@ -743,7 +777,7 @@ class StreamingSpec extends SparkSpec {
     }
   }
 
-  test("a second build of the docs-stream row starts no Parquet schema job") {
+  test("a second build of the docs-stream and graph-maintain rows starts no Parquet schema job") {
     import java.util.concurrent.{CountDownLatch, TimeUnit}
     import java.util.concurrent.atomic.AtomicInteger
     import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
@@ -751,7 +785,9 @@ class StreamingSpec extends SparkSpec {
     java.nio.file.Files.copy(java.nio.file.Paths.get(s"$sf/documents.parquet"),
       dir.toPath.resolve("documents.parquet"))
     // a schema job as perfbench tells one apart: a job whose call site
-    // is `parquet at …`, here reached from docsStream
+    // is `parquet at …`, here reached from docsStream or from
+    // graphMaintain outside its versioned replay (the state versions
+    // that replay reads are rewritten on every build)
     def schemaJobs(body: => Unit): Int = {
       val sc = spark.sparkContext
       val marker = s"streaming-spec-${java.util.UUID.randomUUID()}"
@@ -763,8 +799,11 @@ class StreamingSpec extends SparkSpec {
             markerSeen.countDown()
           else if (ev.stageInfos.nonEmpty) {
             val last = ev.stageInfos.maxBy(_.stageId)
+            val site = last.details
             if (last.name.startsWith("parquet at ") &&
-                last.details.contains("StreamQueries$.docsStream(")) jobs.incrementAndGet()
+                (site.contains("StreamQueries$.docsStream(") ||
+                  (site.contains("StreamQueries$.graphMaintain(") &&
+                    !site.contains("replayVersioned")))) jobs.incrementAndGet()
           }
       }
       sc.addSparkListener(listener)
@@ -787,6 +826,13 @@ class StreamingSpec extends SparkSpec {
         second = rowSet(graft.streaming.StreamQueries.lshDedup(spark, dir.toString))
       } == 0)
       assert(second == first)
+      // the staged arrivals are written once per app, so their schema
+      // is read once: the count is 0 whether or not an earlier case
+      // already built this row
+      graft.streaming.StreamQueries.graphMaintain(spark, sf).collect()
+      assert(schemaJobs {
+        graft.streaming.StreamQueries.graphMaintain(spark, sf).collect()
+      } == 0)
     } finally queries.SourcesSinks.deleteRecursively(dir)
   }
 
