@@ -32,10 +32,11 @@ import org.apache.spark.sql.types._
   * ctx.addReferenceObj, keeping the projection inside whole-stage
   * codegen — the graft_dot / graft_pq_encode pattern
   * (/root/reference/hash-util.h:1 for the kernel ethos). Measured
-  * (dev/ArgMaxProbe, sf0.1 trained assignment, min-of-3): 0.141 s
-  * HOF → 0.094 s native (1.5×) at 2000×44 — a per-(row·cell) gap
-  * that widens with the √N cell count; assignment bit-identical
-  * (probe-joined, zero mismatches).
+  * when the kernel landed (commit 33c9ebe, sf0.1 trained assignment,
+  * min-of-3): 0.141 s HOF → 0.094 s native (1.5×) at 2000×44 — a
+  * per-(row·cell) gap that widens with the √N cell count. SimilaritySpec
+  * pins the assignment to the fold's: zero mismatches on the trained
+  * cells, and the lowest cell on a planted exact tie.
   */
 case class ArgMaxCell(first: Expression, second: Expression,
     third: Expression, fourth: Expression) extends QuaternaryExpression {

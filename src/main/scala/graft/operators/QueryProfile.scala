@@ -1,27 +1,29 @@
 package graft.operators
 
+import java.util.concurrent.{CountDownLatch, TimeUnit}
+
 import scala.collection.concurrent.TrieMap
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Per-stage query profile — the Spark analog of the reference
-  * engine's query profile UX (Impala exposes per-operator rows/bytes/
-  * time for every query; /root/reference/hdfs-parquet-scanner.cc
-  * counters feed it). Spark already aggregates the same counters per
-  * stage; this surface collects them for ONE query run and returns
-  * them as a DataFrame, so a pipeline can assert resource contracts
-  * ("this stage must not spill", "input rows == table rows") the way
-  * the correctness gate asserts values.
+/** Per-run query profile — the Spark analog of the reference engine's
+  * query profile UX (Impala exposes per-operator rows/bytes/time for
+  * every query, fed by its scanners' counters). [[record]] runs one
+  * query build plus one action and returns where the time went:
+  * construct, plan and exec seconds, every Spark job with its phase,
+  * wall time and name, and Spark's per-stage executor-aggregated
+  * counters, so a pipeline can assert resource
+  * contracts ("this stage must not spill", "input rows == table rows")
+  * the way the correctness gate asserts values.
   *
-  * Mechanics: the query runs under a unique jobGroup; the listener
-  * records only stages belonging to that group's jobs, so concurrent
-  * work in a shared session never pollutes the profile. Listener
-  * delivery is asynchronous with no public flush hook, so collection
-  * polls until every announced stage has completed or the set is
-  * quiescent (skipped stages — reused exchanges — never complete) —
-  * bounded wait over profile metadata, read only after the action
-  * returns.
+  * Mechanics: each phase runs under its own job tag. Spark copies a
+  * thread's tags to the threads it starts and to the pools that run
+  * broadcasts and subqueries, so a job counts wherever it runs: a
+  * stream's micro-batch jobs count although StreamExecution sets its
+  * own job group, the run id. Listener delivery is asynchronous, so a
+  * marker job run after the action serves as the barrier: once its
+  * start arrives, every earlier job's, stage's and end's has too.
   */
 object QueryProfile {
 
@@ -38,26 +40,67 @@ object QueryProfile {
       shuffleWriteRecords: Long,
       memorySpillBytes: Long,
       diskSpillBytes: Long,
-      executorRunTimeMs: Long)
+      executorRunTimeMs: Long,
+      executorCpuTimeNs: Long,
+      jvmGcTimeMs: Long)
 
-  /** Run `df.count()` and return (rowCount, per-stage profile). The
-    * profile DataFrame is a tiny local relation (one row per stage of
-    * this query) — driver-side by design, like any metrics readout. */
-  def profile(df: DataFrame): (Long, DataFrame) = {
-    val spark = df.sparkSession
+  /** One Spark job: the phase it started in, its wall time from the
+    * scheduler's start and end events, its stages, whether it ran in a
+    * streaming micro-batch, and its name and call site — those of its
+    * final stage, which Spark names a job after. */
+  case class Job(id: Int, phase: String, wallS: Double, stageIds: Seq[Int],
+      stream: Boolean, name: String, site: String)
+
+  val Construct = "construct"
+  val Plan = "plan"
+  val Exec = "exec"
+
+  /** One run: phase wall seconds, every job, and the completed stages
+    * (skipped stages, such as reused exchanges, never complete). */
+  case class Record(constructS: Double, planS: Double, execS: Double,
+      jobs: Seq[Job], stages: Seq[StageProfile]) {
+    def jobsIn(phase: String): Seq[Job] = jobs.filter(_.phase == phase)
+    def tasks: Int = stages.map(_.numTasks).sum
+    def taskRunS: Double = stages.map(_.executorRunTimeMs).sum / 1e3
+    def taskCpuS: Double = stages.map(_.executorCpuTimeNs).sum / 1e9
+    def taskGcS: Double = stages.map(_.jvmGcTimeMs).sum / 1e3
+  }
+
+  /** Build a DataFrame, plan it and run `action` on it, recording each
+    * phase. Jobs that start while the DataFrame is built, such as an
+    * eager `localCheckpoint` or a bounded stream replay, count as
+    * construction. */
+  def record[T](spark: SparkSession)(build: => DataFrame)(
+      action: DataFrame => T): (T, Record) = {
     val sc = spark.sparkContext
-    val groupId = "graft-profile-" + java.util.UUID.randomUUID()
-    val announced = TrieMap.empty[Int, Unit]
-    val completed = TrieMap.empty[Int, StageProfile]
+    val run = s"graft-profile-${java.util.UUID.randomUUID()}"
+    val marker = s"$run-marker"
+    val phaseOf = Map(Seq(Construct, Plan, Exec).map(p => s"$run-$p" -> p): _*)
+    // job id -> (start time in ms, the job with its wall time unset)
+    val started = TrieMap.empty[Int, (Long, Job)]
+    val ended = TrieMap.empty[Int, Long]
+    val stages = TrieMap.empty[Int, StageProfile]
+    val markerSeen = new CountDownLatch(1)
     val listener = new SparkListener {
-      override def onJobStart(ev: SparkListenerJobStart): Unit =
-        if (groupId == ev.properties.getProperty("spark.jobGroup.id"))
-          ev.stageIds.foreach(announced.put(_, ()))
+      override def onJobStart(ev: SparkListenerJobStart): Unit = {
+        val props = Option(ev.properties)
+        val tags = props.flatMap(p => Option(p.getProperty("spark.job.tags")))
+          .fold(Set.empty[String])(_.split(",").toSet)
+        if (tags(marker)) markerSeen.countDown()
+        else tags.collectFirst(phaseOf).foreach { phase =>
+          val last = ev.stageInfos.maxByOption(_.stageId)
+          started(ev.jobId) = (ev.time, Job(ev.jobId, phase, Double.NaN, ev.stageIds,
+            props.exists(_.getProperty("sql.streaming.queryId") != null),
+            last.fold("")(_.name), last.fold("")(_.details)))
+        }
+      }
+      override def onJobEnd(ev: SparkListenerJobEnd): Unit =
+        if (started.contains(ev.jobId)) ended(ev.jobId) = ev.time
       override def onStageCompleted(ev: SparkListenerStageCompleted): Unit = {
         val si = ev.stageInfo
-        if (announced.contains(si.stageId)) {
+        if (started.values.exists(_._2.stageIds.contains(si.stageId))) {
           val m = si.taskMetrics
-          completed(si.stageId) = StageProfile(
+          stages(si.stageId) = StageProfile(
             si.stageId, si.numTasks,
             m.inputMetrics.recordsRead, m.inputMetrics.bytesRead,
             m.outputMetrics.recordsWritten,
@@ -66,26 +109,38 @@ object QueryProfile {
             m.shuffleWriteMetrics.bytesWritten,
             m.shuffleWriteMetrics.recordsWritten,
             m.memoryBytesSpilled, m.diskBytesSpilled,
-            m.executorRunTime)
+            m.executorRunTime, m.executorCpuTime, m.jvmGCTime)
         }
       }
     }
+    def timed[A](phase: String)(body: => A): (A, Double) = {
+      sc.addJobTag(s"$run-$phase")
+      val t0 = System.nanoTime()
+      try (body, (System.nanoTime() - t0) / 1e9)
+      finally sc.removeJobTag(s"$run-$phase")
+    }
     sc.addSparkListener(listener)
     try {
-      sc.setJobGroup(groupId, "graft query profile", interruptOnCancel = false)
-      val n = try df.count() finally sc.clearJobGroup()
-      var stable = 0
-      var spins = 0
-      while (stable < 3 && spins < 100) {
-        val before = (announced.size, completed.size)
-        Thread.sleep(50)
-        spins += 1
-        if ((announced.size, completed.size) == before &&
-            completed.size >= 1) stable += 1
-        else stable = 0
+      val (df, constructS) = timed(Construct)(build)
+      val (_, planS) = timed(Plan)(df.queryExecution.executedPlan)
+      val (out, execS) = timed(Exec)(action(df))
+      sc.addJobTag(marker)
+      try sc.parallelize(Seq(1), 1).count() finally sc.removeJobTag(marker)
+      require(markerSeen.await(60, TimeUnit.SECONDS), "profile marker job never reported")
+      val jobs = started.toSeq.sortBy(_._1).map { case (id, (t0, job)) =>
+        job.copy(wallS = ended.get(id).fold(Double.NaN)(t1 => (t1 - t0) / 1e3))
       }
-      import spark.implicits._
-      (n, completed.values.toSeq.sortBy(_.stageId).toDF())
+      (out, Record(constructS, planS, execS, jobs, stages.values.toSeq.sortBy(_.stageId)))
     } finally sc.removeSparkListener(listener)
+  }
+
+  /** Run `df.count()` and return (rowCount, per-stage profile). The
+    * profile DataFrame is a tiny local relation (one row per stage of
+    * this query) — driver-side by design, like any metrics readout. */
+  def profile(df: DataFrame): (Long, DataFrame) = {
+    val spark = df.sparkSession
+    val (n, rec) = record(spark)(df)(_.count())
+    import spark.implicits._
+    (n, rec.stages.toDF())
   }
 }

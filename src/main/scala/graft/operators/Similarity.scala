@@ -363,7 +363,7 @@ object Similarity {
     * whole-stage-codegen loop; the previous aggregate() HOF fold ran
     * its lambda interpreted per cell, √N interpreted steps per corpus
     * row at the trained family's data-derived cell count — measured
-    * 1.5× on the sf0.1 assignment pass, dev/ArgMaxProbe). Bit-identical
+    * 1.5× on the sf0.1 assignment pass, commit 33c9ebe). Bit-identical
     * semantics to the fold it replaces ([[graft.functions.ArgMaxCell]]):
     * strict `>` over the cell-ascending array keeps the LOWEST cell
     * on exact cosine ties, identical to the oracle's
@@ -1422,8 +1422,9 @@ object Similarity {
     * beam round with the tiny frontier broadcast against it — at
     * extreme node counts a deployment fronts these edges with a
     * point-lookup store instead; a src-bucket PARTITIONED parquet
-    * layout does NOT buy in-plan pruning here (measured,
-    * dev/EdgeDppProbe: dynamic partition pruning requires a
+    * layout does NOT buy in-plan pruning here (measured in commit
+    * a77eed2 on a src-bucket-partitioned copy of the edges joined to a
+    * checkpointed frontier: dynamic partition pruning requires a
     * selective predicate on the pruning side, and the beam frontier
     * is a checkpointed relation with none — DPP never fires), so the
     * flat layout is kept deliberately. */

@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.types.StructType
 import scala.util.control.NonFatal
 
 /** Oracle-checked Structured Streaming queries — the streaming rows
@@ -277,28 +278,35 @@ object StreamQueries {
     * [[graphMaintain]]: batch `id` reads state version v{id} (None
     * before the first batch) and `step` builds v{id+1} from it,
     * written keyed by batchId, so a replayed batch rewrites the same
-    * version with the same bytes. `finish` reads the last version;
-    * then both scratch trees, state and checkpoint, are deleted on
-    * every path, and a failure names both and the last progress. */
+    * version with the same bytes. `finish` gets a reader of the last
+    * version for the session it names; then both scratch trees, state
+    * and checkpoint, are deleted on every path, and a failure names
+    * both and the last progress. Every version is read through the
+    * schema of the DataFrame that wrote it, so no read infers a
+    * footer in a Spark job. */
   private[graft] def replayVersioned(stream: DataFrame, stateTag: String)(
       step: (DataFrame, Option[DataFrame]) => DataFrame)(
-      finish: String => DataFrame): DataFrame = {
+      finish: (SparkSession => DataFrame) => DataFrame): DataFrame = {
     val base = scratchDir(stateTag)
     val lastVersion = new java.util.concurrent.atomic.AtomicLong(0L)
+    val written = new java.util.concurrent.atomic.AtomicReference[StructType]()
+    def read(s: SparkSession, version: Long): DataFrame =
+      s.read.schema(written.get()).parquet(s"$base/v$version")
     try {
       awaitReplay(s"versioned replay with state $base")(ckpt =>
         stream.writeStream
           .foreachBatch { (batch: DataFrame, id: Long) =>
-            val prev = s"$base/v$id"
             val state =
-              if (new java.io.File(prev).exists()) Some(batch.sparkSession.read.parquet(prev))
+              if (new java.io.File(s"$base/v$id").exists()) Some(read(batch.sparkSession, id))
               else None
-            step(batch, state).write.mode("overwrite").parquet(s"$base/v${id + 1}")
+            val next = step(batch, state)
+            next.write.mode("overwrite").parquet(s"$base/v${id + 1}")
+            written.set(next.schema)
             lastVersion.set(math.max(lastVersion.get(), id + 1))
           }
           .option("checkpointLocation", ckpt)
           .trigger(Trigger.AvailableNow()).start())
-      finish(s"$base/v${lastVersion.get()}")
+      finish(read(_, lastVersion.get()))
     } finally deleteRecursively(new java.io.File(base))
   }
 
@@ -666,7 +674,7 @@ object StreamQueries {
               .otherwise(col("last")).as("last"))
       }
     } { last =>
-      spark.read.parquet(last)
+      last(spark)
         .select(col("user_id"), col("n_events"),
           expr("last.ns div 1000000000").as("last_sec"),
           col("last.event_id").as("last_event_id"),
@@ -732,7 +740,7 @@ object StreamQueries {
       // grade on the BATCH session (32 shuffle partitions): the audit
       // is the batch-surface brute-force pass, not part of the replay
       graft.operators.Similarity
-        .gradeInsertLinks(spark0, dir, spark0.read.parquet(last), auditSampleMod = 1L)
+        .gradeInsertLinks(spark0, dir, last(spark0), auditSampleMod = 1L)
         .localCheckpoint(true)
     }
   }

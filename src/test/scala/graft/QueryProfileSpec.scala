@@ -32,4 +32,20 @@ class QueryProfileSpec extends SparkSpec {
     assert(written <= rows.map(_.getAs[Int]("numTasks")).max)
     assert(rows.map(_.getAs[Long]("shuffleWriteBytes")).sum < 10240L)
   }
+
+  test("record: eager checkpoints are construction, and a stream row's jobs all count") {
+    import operators.QueryProfile.{Construct, Exec, record}
+    val ckpt = (j: operators.QueryProfile.Job) => j.name.startsWith("localCheckpoint at ")
+    val (n, rec) = record(spark)(
+      spark.range(1000).localCheckpoint().groupBy((col("id") % 7).as("k")).count())(_.count())
+    assert(n == 7L)
+    assert(rec.jobsIn(Construct).exists(ckpt), rec.jobs)
+    assert(!rec.jobsIn(Exec).exists(ckpt), rec.jobs)
+    assert(rec.jobsIn(Exec).nonEmpty, rec.jobs)
+    // the replay runs its micro-batches under the stream's own job
+    // group while the row is built; the sorted result runs at exec
+    val (_, stream) = record(spark)(SparkEntry.queries("stream_tumbling_agg")(spark, sf))(_.collect())
+    assert(stream.jobsIn(Exec).nonEmpty, stream.jobs)
+    assert(stream.jobsIn(Construct).exists(_.stream), stream.jobs)
+  }
 }

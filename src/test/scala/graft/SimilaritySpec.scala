@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 class SimilaritySpec extends SparkSpec {
@@ -729,5 +730,40 @@ class SimilaritySpec extends SparkSpec {
     assert(bl.getAs[Long]("n_hits") <= bl.getAs[Long]("n_edges"))
     assert(bl.getAs[Long]("n_edges") == br.getAs[Long]("n_edges"),
       "blocked kNN must emit the same per-src edge count as exact")
+  }
+
+  test("graft_argmax_cell assigns exactly the cell the aggregate() fold it replaced picks") {
+    org.apache.spark.sql.GraftFunctions.register(spark)
+    // the fold: strict > over the cell-ascending centroid array
+    val fold = """aggregate(
+      transform(cents, c -> named_struct(
+        'sim', graft_dot(vd, c.cv) / (vnrm * c.cnrm), 'cell', c.cell)),
+      named_struct('sim', CAST(-2.0 AS DOUBLE), 'cell', CAST(-1 AS BIGINT)),
+      (acc, s) -> IF(s.sim > acc.sim, s, acc)).cell"""
+    // (vec_id, native cell, fold cell) of `vectors` against `cells`
+    def both(vectors: DataFrame, cells: DataFrame): DataFrame = {
+      val centsRow = cells.agg(
+        array_sort(collect_list(struct(col("cell"), col("cv"), col("cnrm")))).as("cents"))
+      operators.Similarity.assignTo(vectors, cells)
+        .select(col("vec_id"), col("cell").as("native"))
+        .join(vectors.crossJoin(broadcast(centsRow))
+          .select(col("vec_id"), expr(fold).as("fold")), "vec_id")
+    }
+    def mismatches(df: DataFrame): Long = df.filter(!(col("native") <=> col("fold"))).count()
+    val corpus = operators.Vectors.asDouble(sources.Tables.embeddings(spark, sf))
+      .select(col("vec_id"), col("vd"), operators.Vectors.norm(col("vd")).as("vnrm"))
+    val trained = both(corpus, operators.Similarity.trainedCellsOf(corpus, 2))
+    assert(trained.count() == corpus.count())
+    assert(mismatches(trained) == 0L)
+    // a planted exact-cosine tie: cells 5 and 2 hold the same centroid,
+    // so the lowest cell wins in both
+    import spark.implicits._
+    val planted = Seq((5L, Seq(2.0, 4.0)), (2L, Seq(2.0, 4.0)), (1L, Seq(0.0, 1.0)),
+        (9L, Seq(-1.0, 0.0))).toDF("cell", "cv")
+      .withColumn("cnrm", operators.Vectors.norm(col("cv")))
+    val probe = Seq((0L, Seq(1.0, 2.0))).toDF("vec_id", "vd")
+      .withColumn("vnrm", operators.Vectors.norm(col("vd")))
+    val tie = both(probe, planted).collect()
+    assert(tie.map(r => (r.getAs[Long]("native"), r.getAs[Long]("fold"))).toSeq == Seq((2L, 2L)))
   }
 }

@@ -1,10 +1,8 @@
 package graft
 
 import java.nio.file.Files
-import java.util.concurrent.{CountDownLatch, TimeUnit}
-import java.util.concurrent.atomic.AtomicInteger
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -25,32 +23,11 @@ class TablesSpec extends SparkSpec {
     d.getAbsolutePath
   }
 
-  /** Run `body` and count the Spark jobs it started. Listener delivery
-    * is asynchronous, so a marker job run afterwards serves as the
-    * barrier: once its start arrives, every earlier job's has too. */
-  private def jobsDuring[T](body: => T): (T, Int) = {
-    val sc = spark.sparkContext
-    val group = s"tables-spec-${java.util.UUID.randomUUID()}"
-    val marker = s"$group-marker"
-    val jobs = new AtomicInteger(0)
-    val markerSeen = new CountDownLatch(1)
-    val listener = new SparkListener {
-      override def onJobStart(ev: SparkListenerJobStart): Unit =
-        ev.properties.getProperty("spark.jobGroup.id") match {
-          case `group` => jobs.incrementAndGet()
-          case `marker` => markerSeen.countDown()
-          case _ =>
-        }
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup(group, "measured", interruptOnCancel = false)
-      val out = try body finally sc.clearJobGroup()
-      sc.setJobGroup(marker, "barrier", interruptOnCancel = false)
-      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
-      assert(markerSeen.await(60, TimeUnit.SECONDS), "marker job never reported")
-      (out, jobs.get)
-    } finally sc.removeSparkListener(listener)
+  /** Build a DataFrame with `body` and count the Spark jobs the build
+    * started, as the query recorder attributes them. */
+  private def jobsDuring(body: => DataFrame): (DataFrame, Int) = {
+    val (df, rec) = operators.QueryProfile.record(spark)(body)(identity)
+    (df, rec.jobsIn(operators.QueryProfile.Construct).size)
   }
 
   test("a second load of an unchanged table starts no Spark job") {
