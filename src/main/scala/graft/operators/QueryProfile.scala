@@ -76,9 +76,8 @@ object QueryProfile {
     val run = s"graft-profile-${java.util.UUID.randomUUID()}"
     val marker = s"$run-marker"
     val phaseOf = Map(Seq(Construct, Plan, Exec).map(p => s"$run-$p" -> p): _*)
-    // job id -> (start time in ms, the job with its wall time unset)
+    // job id -> (start time in ms, the job; its wall time set at end)
     val started = TrieMap.empty[Int, (Long, Job)]
-    val ended = TrieMap.empty[Int, Long]
     val stages = TrieMap.empty[Int, StageProfile]
     val markerSeen = new CountDownLatch(1)
     val listener = new SparkListener {
@@ -95,7 +94,9 @@ object QueryProfile {
         }
       }
       override def onJobEnd(ev: SparkListenerJobEnd): Unit =
-        if (started.contains(ev.jobId)) ended(ev.jobId) = ev.time
+        started.get(ev.jobId).foreach { case (t0, job) =>
+          started(ev.jobId) = (t0, job.copy(wallS = (ev.time - t0) / 1e3))
+        }
       override def onStageCompleted(ev: SparkListenerStageCompleted): Unit = {
         val si = ev.stageInfo
         if (started.values.exists(_._2.stageIds.contains(si.stageId))) {
@@ -127,9 +128,7 @@ object QueryProfile {
       sc.addJobTag(marker)
       try sc.parallelize(Seq(1), 1).count() finally sc.removeJobTag(marker)
       require(markerSeen.await(60, TimeUnit.SECONDS), "profile marker job never reported")
-      val jobs = started.toSeq.sortBy(_._1).map { case (id, (t0, job)) =>
-        job.copy(wallS = ended.get(id).fold(Double.NaN)(t1 => (t1 - t0) / 1e3))
-      }
+      val jobs = started.toSeq.sortBy(_._1).map(_._2._2)
       (out, Record(constructS, planS, execS, jobs, stages.values.toSeq.sortBy(_.stageId)))
     } finally sc.removeSparkListener(listener)
   }
