@@ -29,7 +29,9 @@ import graft.operators.QueryProfile
   *
   *  - trace: a warm build and run, then one recorded by
   *    [[QueryProfile.record]]: the construct/plan/exec split, every
-  *    job, and per-stage input, shuffle and spill.
+  *    job, and per-stage input, shuffle and spill; last, how many
+  *    state-store providers are still loaded, in all and under the
+  *    stream replays' checkpoint dirs.
   *  - ab: warms A (the query as registered) and B (the same query on
   *    the child session), then runs ten interleaved pairs A,B and
   *    prints each pair's B/A and the median. Timings across sessions
@@ -102,6 +104,9 @@ object Probe {
         f"shuffle r/w=${s.shuffleReadBytes}/${s.shuffleWriteBytes} B " +
         f"spill=${s.memorySpillBytes + s.diskSpillBytes} B run=${s.executorRunTimeMs} ms")
     }
+    // what the query left behind: a finished replay leaves no state store
+    println(s"[trace]   state stores still loaded: ${GraftFunctions.loadedStateStores().size} " +
+      s"(${graft.streaming.StreamQueries.replayStateStores().size} under replay checkpoints)")
   }
 
   private def ab(a: SparkSession, b: SparkSession, dir: String,

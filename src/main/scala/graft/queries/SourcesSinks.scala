@@ -1447,15 +1447,17 @@ object SourcesSinks {
       .select((col("c_custkey") + lit(10000000L)).as("k"), lit("I").as("op"),
         lit("NEWCOMER").as("seg"), col("c_acctbal").as("bal"))
     val delta = deletes.unionByName(updates).unionByName(inserts)
-    snap.join(delta, col("c_custkey") === col("k"), "full_outer")
+    val merged = snap.join(delta, col("c_custkey") === col("k"), "full_outer")
       .filter(col("op").isNull || col("op") =!= "D")
       .select(coalesce(col("k"), col("c_custkey")).as("c_custkey"),
         when(col("op").isNotNull, col("seg")).otherwise(col("c_mktsegment"))
           .as("c_mktsegment"),
         when(col("op").isNotNull, col("bal")).otherwise(col("c_acctbal"))
           .as("c_acctbal"))
-      .write.mode("overwrite").parquet(path)
-    spark.read.parquet(path)
+    merged.write.mode("overwrite").parquet(path)
+    // read back through the schema just written: a bare read would
+    // infer it again from the footers, in a Spark job per build
+    spark.read.schema(merged.schema).parquet(path)
       .groupBy("c_mktsegment")
       .agg(count(lit(1)).as("n_rows"),
         sum(col("c_acctbal").cast(D)).cast("double").as("sum_bal"),

@@ -24,7 +24,11 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType,
   * catalog service instead of re-read per query).
   */
 object Tables {
-  def table(spark: SparkSession, sfDir: String, name: String): DataFrame = {
+  /** The session confs every graft query reads under. [[table]] sets
+    * them on the session the driver hands over, and
+    * `GraftFunctions.childSession` on every child session when it is
+    * opened. */
+  val sessionConf: Seq[(String, String)] = Seq(
     // events.ts has shipped as parquet TIMESTAMP(NANOS) in some data
     // generations (Spark 4 reads those as BIGINT epoch-nanos behind
     // this legacy flag) and as TIMESTAMP(MICROS) in others. All graft
@@ -32,11 +36,14 @@ object Tables {
     // DuckDB oracles mirror it with epoch_ns(ts). `events` below
     // normalizes whatever physical type arrives to the epoch-ns
     // contract.
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    "spark.sql.legacy.parquet.nanosAsLong" -> "true",
     // naive timestamps (TIMESTAMP_NTZ / DuckDB TIMESTAMP) are
     // compared as UTC wall clock on both sides; pin the session zone
     // so the ntz→epoch conversion can't drift with host timezone.
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
+    "spark.sql.session.timeZone" -> "UTC")
+
+  def table(spark: SparkSession, sfDir: String, name: String): DataFrame = {
+    sessionConf.foreach { case (k, v) => spark.conf.set(k, v) }
     // session-scoped native functions (graft_dot); the driver hands us
     // a pre-built session, so registration rides every table access.
     org.apache.spark.sql.GraftFunctions.register(spark)

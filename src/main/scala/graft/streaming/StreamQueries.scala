@@ -52,13 +52,30 @@ object StreamQueries {
     * storage precisely because its checkpoints must OUTLIVE the job —
     * a replay's must not). Falls back to java.io.tmpdir when no
     * tmpfs is mounted. */
-  private[streaming] def scratchDir(prefix: String): String = {
+  private[streaming] def scratchDir(prefix: String): String =
+    java.nio.file.Files.createTempDirectory(scratchRoot, prefix).toString
+
+  private lazy val scratchRoot: java.nio.file.Path = {
     val shm = new java.io.File("/dev/shm")
-    val root =
-      if (shm.isDirectory && shm.canWrite) shm.toPath
-      else java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"))
-    java.nio.file.Files.createTempDirectory(root, prefix).toString
-  }
+    if (shm.isDirectory && shm.canWrite) shm.toPath
+    else java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"))
+  }.toAbsolutePath.normalize
+
+  /** Name prefix of every replay's checkpoint dir under [[scratchRoot]]. */
+  private val CkptPrefix = "graft_ckpt_"
+
+  /** The state-store providers still loaded in this JVM whose checkpoint
+    * lies under a replay checkpoint dir (see [[awaitReplay]]). The
+    * registry holds each root as a qualified `file:` URI, so the paths
+    * are compared resolved. A finished replay leaves none. */
+  private[graft] def replayStateStores(): Seq[org.apache.spark.sql.execution.streaming.state.StateStoreProviderId] =
+    org.apache.spark.sql.GraftFunctions.loadedStateStores().filter { id =>
+      val p = java.nio.file.Paths.get(
+        new org.apache.hadoop.fs.Path(id.storeId.checkpointRootLocation).toUri.getPath)
+        .toAbsolutePath.normalize
+      p.startsWith(scratchRoot) && p.getNameCount > scratchRoot.getNameCount &&
+        p.getName(scratchRoot.getNameCount).toString.startsWith(CkptPrefix)
+    }
 
   /** Child session sized for the bounded replay, opened through
     * [[org.apache.spark.sql.GraftFunctions.childSession]], so every
@@ -237,14 +254,28 @@ object StreamQueries {
   }
 
   /** Start a replay against a fresh scratch checkpoint and wait for
-    * AvailableNow to drain it. The checkpoint must not outlive the
-    * replay even when the query throws — it lives on RAM-backed
-    * tmpfs, so a leak costs memory, not just inodes (r16,
-    * per-ADVICE). What a failure leaves for diagnosis is the message:
-    * `what`, the checkpoint path and the last completed batch's
-    * progress. */
+    * AvailableNow to drain it. A finished replay, whether it succeeded
+    * or threw, leaves nothing behind: no checkpoint dir, and no loaded
+    * state store.
+    *  - The checkpoint lives on RAM-backed tmpfs, so a leak costs
+    *    memory, not just inodes (r16, per-ADVICE).
+    *  - Before the dir goes, every state-store provider of the stopped
+    *    query is unloaded and closed
+    *    ([[org.apache.spark.sql.GraftFunctions.unloadStateStores]]):
+    *    its in-memory state maps, or its RocksDB instances for the
+    *    transformWithState row, would otherwise stay on the heap until
+    *    Spark's 60 s maintenance sweep, for a run whose checkpoint no
+    *    longer exists. This reaches the providers wherever the
+    *    executor registry is this JVM's: local mode, as Bench, Verify
+    *    and the tests run. On a cluster the executors' maintenance
+    *    still unloads them. A task of a failed batch that Spark has
+    *    not yet killed when the query stops can load its provider
+    *    after the unload; that one, too, is left to the maintenance
+    *    sweep.
+    * What a failure leaves for diagnosis is the message: `what`, the
+    * checkpoint path and the last completed batch's progress. */
   private def awaitReplay(what: String)(start: String => StreamingQuery): Unit = {
-    val ckpt = scratchDir("graft_ckpt_")
+    val ckpt = scratchDir(CkptPrefix)
     var started: Option[StreamingQuery] = None
     try {
       started = Some(start(ckpt))
@@ -255,14 +286,19 @@ object StreamQueries {
           .map(_.json).getOrElse("none")
         throw new IllegalStateException(
           s"$what failed (checkpoint $ckpt, deleted); last progress: $last", e)
-    } finally deleteRecursively(new java.io.File(ckpt))
+    } finally {
+      try started.foreach(org.apache.spark.sql.GraftFunctions.unloadStateStores)
+      finally deleteRecursively(new java.io.File(ckpt))
+    }
   }
 
   /** Run a bounded streaming query to completion and hand back its
     * result as a plain DataFrame: AvailableNow drains the backlog and
     * self-terminates; the memory-sink rows are localCheckpoint'd so
     * the temp view can be dropped at once (repeated bench runs must
-    * not accumulate sink tables on the driver). */
+    * not accumulate sink tables on the driver). What the replay leaves
+    * behind is that result alone: [[awaitReplay]] deletes its
+    * checkpoint dir and unloads its state stores. */
   private[graft] def runBounded(spark: SparkSession, df: DataFrame, mode: String): DataFrame = {
     val name = s"graft_stream_out_${seq.incrementAndGet()}"
     awaitReplay(s"bounded replay $name")(ckpt =>

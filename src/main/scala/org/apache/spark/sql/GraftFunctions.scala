@@ -2,6 +2,10 @@ package org.apache.spark.sql
 
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import org.apache.spark.sql.execution.streaming.operators.stateful.StateStoreWriter
+import org.apache.spark.sql.execution.streaming.runtime.StreamingQueryWrapper
+import org.apache.spark.sql.execution.streaming.state.{StateStore, StateStoreId, StateStoreProviderId}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 /** Registers graft's native Catalyst expressions on a session's own
   * function registry, and graft's optimizer rule on its experimental
@@ -38,7 +42,11 @@ object GraftFunctions {
 
   /** A child session of `parent` for a query that needs its own confs:
     * artifact isolation off, graft's functions and optimizer rule
-    * registered, then `conf` applied, in that order.
+    * registered, graft's session confs ([[graft.sources.Tables.sessionConf]])
+    * set, then `conf` applied, in that order. `newSession()` copies no
+    * runtime conf, so without the graft confs a child session would
+    * read parquet under other flags than its parent until its first
+    * `Tables.table` call, and cache inferred schemas under another key.
     *
     * Isolation is off because graft never adds jars, files or classes
     * to a session, so it buys nothing, and it costs a recompile: with
@@ -59,8 +67,56 @@ object GraftFunctions {
     val s = parent.newSession()
     s.conf.set("spark.sql.artifact.isolation.enabled", "false")
     register(s)
-    conf.foreach { case (k, v) => s.conf.set(k, v) }
+    (graft.sources.Tables.sessionConf ++ conf).foreach { case (k, v) => s.conf.set(k, v) }
     s
+  }
+
+  /** Unload and close every state-store provider of the stopped
+    * `query`, dropping its in-memory state maps or closing its RocksDB
+    * instances now instead of at Spark's next maintenance sweep
+    * (`spark.sql.streaming.stateStore.maintenanceInterval`, 60 s by
+    * default). The providers are named from the query's last
+    * micro-batch plan: one per state-store name of each stateful
+    * operator (a stream-stream join has four) and per partition, under
+    * the operator's `StatefulOperatorStateInfo` (checkpoint location,
+    * run id, operator id, partition count). Every batch of a run plans
+    * its stateful operators with the same ids, so the last plan names
+    * them all, and only this run's providers go: a concurrent query
+    * keeps its own. A stateless query names none. So does a query whose
+    * last batch failed to plan; what earlier batches loaded is then
+    * left to the maintenance sweep.
+    *
+    * Scope: this acts on the executor-side registry of the JVM it runs
+    * in. In local mode, where the executor is the driver, that is every
+    * provider the query loaded. On a cluster the driver holds none, and
+    * the executors' own maintenance unloads them once the state-store
+    * coordinator has marked the stopped run inactive. */
+  def unloadStateStores(query: StreamingQuery): Unit = query match {
+    case w: StreamingQueryWrapper =>
+      for {
+        ex <- Option(w.streamingQuery.lastExecution).toSeq
+        // a plan that failed to build would throw again here, over the
+        // query's own failure
+        plan <- scala.util.Try(ex.executedPlan).toOption.toSeq
+        op <- plan.collect { case op: StateStoreWriter => op }
+        info = op.getStateInfo
+        name <- op.stateStoreNames
+        part <- 0 until info.numPartitions
+      } StateStore.removeFromLoadedProvidersAndClose(StateStoreProviderId(
+        StateStoreId(info.checkpointLocation, info.operatorId, part, name), info.queryRunId))
+    case _ =>
+  }
+
+  /** Every state-store provider loaded in this JVM's executor-side
+    * registry. Spark keeps that map private, so it is read by
+    * reflection, under the map's own lock as Spark reads it. For
+    * diagnostics and tests only. */
+  def loadedStateStores(): Seq[StateStoreProviderId] = {
+    val field = StateStore.getClass.getDeclaredField("loadedProviders")
+    field.setAccessible(true)
+    val loaded = field.get(StateStore)
+      .asInstanceOf[scala.collection.mutable.HashMap[StateStoreProviderId, _]]
+    loaded.synchronized(loaded.keys.toSeq)
   }
 
   def register(spark: SparkSession): Unit = {

@@ -3,10 +3,10 @@ package graft
 import org.apache.spark.sql.{AnalysisException, GraftFunctions}
 import org.apache.spark.sql.functions._
 
-/** `GraftFunctions.childSession`: the caller's confs land on the child
-  * and not on the parent, graft's functions resolve in the child, and
-  * a stream's per-start clone of a replay session keeps artifact
-  * isolation off. */
+/** `GraftFunctions.childSession`: graft's session confs and then the
+  * caller's land on the child and not on the parent, graft's functions
+  * resolve in the child, and a stream's per-start clone of a replay
+  * session keeps artifact isolation off. */
 class ChildSessionSpec extends SparkSpec {
   private val Isolation = "spark.sql.artifact.isolation.enabled"
 
@@ -20,6 +20,12 @@ class ChildSessionSpec extends SparkSpec {
     assert(keys.map(spark.conf.getOption) == parentBefore)
     // a caller's conf has the last word, isolation included
     assert(GraftFunctions.childSession(spark, Isolation -> "true").conf.get(Isolation) == "true")
+  }
+
+  test("a child session starts with graft's session confs, before the caller's") {
+    val s = GraftFunctions.childSession(spark.newSession(), "spark.sql.session.timeZone" -> "Asia/Tokyo")
+    val want = graft.sources.Tables.sessionConf.toMap + ("spark.sql.session.timeZone" -> "Asia/Tokyo")
+    assert(want.keys.map(k => k -> s.conf.get(k)).toMap == want)
   }
 
   test("graft_dot resolves in a child session and not in a bare new session") {

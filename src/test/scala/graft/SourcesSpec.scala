@@ -514,6 +514,20 @@ class SourcesSpec extends SparkSpec {
     both.foreach(k => assert(!got.contains(k)))
   }
 
+  test("merge upsert reads its rewrite back under the written schema, with no schema job") {
+    import org.apache.spark.sql.execution.datasources.LogicalRelation
+    queries.SourcesSinks.mergeUpsert(spark, sf).collect()
+    val (df, rec) = operators.QueryProfile.record(spark)(
+      queries.SourcesSinks.mergeUpsert(spark, sf))(identity)
+    val inference = rec.jobs.filter(_.name.startsWith("parquet at SourcesSinks"))
+    assert(inference.isEmpty, inference.map(_.name).mkString(", "))
+    val pinned = df.queryExecution.analyzed.collectFirst {
+      case r: LogicalRelation => r.relation.schema
+    }
+    val inferred = spark.read.parquet(queries.SourcesSinks.tmp(spark, sf, "customer_merged")).schema
+    assert(pinned.contains(inferred), s"$pinned vs $inferred")
+  }
+
   test("morton16 interleave round-trips hand-computed bit patterns") {
     import spark.implicits._
     import org.apache.spark.sql.functions.col

@@ -1,6 +1,10 @@
 package graft
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent}
+import org.apache.spark.sql.GraftFunctions
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+import org.apache.spark.sql.execution.streaming.state.StateStoreProviderId
+import org.apache.spark.sql.streaming.StreamingQueryListener
 import org.apache.spark.sql.functions._
 import graft.streaming.EventStream
 import graft.streaming.EventStream.Ev
@@ -807,11 +811,10 @@ class StreamingSpec extends SparkSpec {
     // each state version is read through the schema it was written
     // with; the final read is the one a call site names (StreamExecution
     // names every micro-batch job after the stream's `start` call). The
-    // staged arrivals are written once per app, but their schema is
-    // cached under the replay session's parquet conf, which only the
-    // build that stages sets: run alone, the warm build below stages and
-    // the measured one infers the schema once more (1 job); in suite
-    // order an earlier case has already built this row
+    // staged arrivals are written once per app, and their schema is
+    // cached under the replay session's parquet conf, which every child
+    // session gets when it is opened: the warm build below infers it
+    // (or an earlier case did), and the measured one reads the cache
     graft.streaming.StreamQueries.graphMaintain(spark, sf).collect()
     assert(schemaJobs(_.contains("StreamQueries$.graphMaintain("))(
       graft.streaming.StreamQueries.graphMaintain(spark, sf))._2 == 0)
@@ -836,5 +839,64 @@ class StreamingSpec extends SparkSpec {
     val (again, n) = compiled(replay(spark, sf).collect())
     assert(n == 0, s"the second replay compiled $n classes")
     assert(again.toSeq == warm.toSeq)
+  }
+
+  // the state-store providers a build of `row` leaves loaded, and the
+  // most state-store instances one of its micro-batches reports
+  private def replayLeftovers(row: String): (Set[StateStoreProviderId], Long) = {
+    val before = GraftFunctions.loadedStateStores().toSet
+    val instances = new java.util.concurrent.atomic.AtomicLong
+    val progress = new SparkListener {
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case p: StreamingQueryListener.QueryProgressEvent =>
+          instances.accumulateAndGet(
+            p.progress.stateOperators.map(_.numStateStoreInstances).sum, math.max(_, _))
+        case _ =>
+      }
+    }
+    spark.sparkContext.addSparkListener(progress)
+    // the recorder returns once the listener bus has delivered every
+    // event posted before its marker job, the replay's progress included
+    try operators.QueryProfile.record(spark)(SparkEntry.queries(row)(spark, sf))(_.collect())
+    finally spark.sparkContext.removeSparkListener(progress)
+    (GraftFunctions.loadedStateStores().toSet -- before, instances.get)
+  }
+
+  // HDFS-backed maps, RocksDB instances, and a join's four store names
+  // (both sides' keyToNumValues and keyWithIndexToValue), 8 partitions each
+  for ((row, stores) <- Seq("stream_tumbling_agg" -> 8L, "stream_cep_funnels" -> 8L,
+      "stream_interval_join" -> 32L))
+    test(s"a finished $row replay leaves none of its $stores state stores loaded") {
+      val (left, seen) = replayLeftovers(row)
+      assert(seen == stores)
+      assert(left.isEmpty, left.mkString(", "))
+    }
+
+  test("three replays in a row leave the state-store registry as it was") {
+    val before = GraftFunctions.loadedStateStores().toSet
+    for (row <- Seq("stream_tumbling_agg", "stream_cep_funnels", "stream_interval_join"))
+      SparkEntry.queries(row)(spark, sf).collect()
+    // Spark's maintenance sweep may unload older providers meanwhile,
+    // so the registry can shrink; it must not grow
+    val after = GraftFunctions.loadedStateStores().toSet
+    assert(after.subsetOf(before), (after -- before).mkString(", "))
+  }
+
+  test("a failed stateful replay leaves none of its state stores loaded") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_replay_state_fail").toFile
+    // one partition: the one stateful task loads its store, then fails
+    val s = GraftFunctions.childSession(spark, "spark.sql.shuffle.partitions" -> "1")
+    try {
+      s.range(3).write.parquet(s"$dir/in")
+      val failing = s.readStream.schema("id long").parquet(s"$dir/in")
+        .groupBy().count()
+        .select(expr("if(count >= 0, raise_error('planted stateful failure'), count)").as("x"))
+      val before = GraftFunctions.loadedStateStores().toSet
+      val e = intercept[IllegalStateException](
+        graft.streaming.StreamQueries.runBounded(s, failing, "complete"))
+      assert(e.getMessage.contains("bounded replay"), e.getMessage)
+      val left = GraftFunctions.loadedStateStores().toSet -- before
+      assert(left.isEmpty, left.mkString(", "))
+    } finally queries.SourcesSinks.deleteRecursively(dir)
   }
 }
