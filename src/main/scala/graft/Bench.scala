@@ -158,13 +158,17 @@ object Bench {
         (n, prev(n), w)
     }.sortBy { case (_, p, w) => -(w / p) }
 
-  /** Canonical-plan fingerprint: md5 of the canonicalized optimized
-    * plan with run-varying tokens (the per-app scratch dir, object
-    * addresses) normalized out, so the same code yields the same
-    * fingerprint across JVMs and a code change that alters the plan
-    * yields a new one. */
-  private[graft] def planFingerprint(df: org.apache.spark.sql.DataFrame): String = {
-    val s = df.queryExecution.optimizedPlan.canonicalized.toString
+  /** Canonical-plan fingerprint: md5 of [[canonicalPlan]], so the
+    * same code yields the same fingerprint across JVMs and a code
+    * change that alters the plan yields a new one. */
+  private[graft] def planFingerprint(df: org.apache.spark.sql.DataFrame): String =
+    java.security.MessageDigest.getInstance("MD5")
+      .digest(canonicalPlan(df).getBytes("UTF-8")).map("%02x".format(_)).mkString
+
+  /** The canonicalized optimized plan as text, with run-varying tokens
+    * (the per-app scratch dir, object addresses) normalized out. */
+  private[graft] def canonicalPlan(df: org.apache.spark.sql.DataFrame): String =
+    df.queryExecution.optimizedPlan.canonicalized.toString
       .replaceAll("graft_io/[^/]+", "graft_io/APP")
       .replaceAll("@[0-9a-fA-F]{4,}", "@X")
       // typed-operation closures print as Foo$$$Lambda$2374/0x00007f…
@@ -174,9 +178,6 @@ object Bench {
       // round 15: the mm_*_real/src_avro repeat resets were exactly
       // these tokens)
       .replaceAll("Lambda\\$\\d+/0x[0-9a-fA-F]+", "LambdaN")
-    java.security.MessageDigest.getInstance("MD5")
-      .digest(s.getBytes("UTF-8")).map("%02x".format(_)).mkString
-  }
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")

@@ -39,8 +39,8 @@ import graft.operators.QueryProfile
   *    ratios in one session cancel ambient drift to first order.
   *  - plan: `Bench.planFingerprint`, the physical joins, and flags for
   *    CartesianProduct, InMemoryTableScan and a broadcast nested-loop
-  *    join whose build side is unbounded; with `--out`, each
-  *    fingerprinted (normalized, canonicalized) plan goes to
+  *    join whose build side is unbounded; with `--out`, the string the
+  *    fingerprint hashes (`Bench.canonicalPlan`) goes to
   *    DIR/<query>.txt.
   */
 object Probe {
@@ -138,13 +138,9 @@ object Probe {
     println(s"[plan] $name fp=${graft.Bench.planFingerprint(df)} " +
       s"joins=${joins.mkString(",")} ${if (flags.isEmpty) "clean" else "FLAGS: " + flags.mkString(",")}")
     out.foreach { d =>
-      // the string Bench.planFingerprint hashes
-      val s = df.queryExecution.optimizedPlan.canonicalized.toString
-        .replaceAll("graft_io/[^/]+", "graft_io/APP")
-        .replaceAll("@[0-9a-fA-F]{4,}", "@X")
-        .replaceAll("Lambda\\$\\d+/0x[0-9a-fA-F]+", "LambdaN")
       java.nio.file.Files.createDirectories(java.nio.file.Paths.get(d))
-      java.nio.file.Files.writeString(java.nio.file.Paths.get(d, s"$name.txt"), s)
+      java.nio.file.Files.writeString(java.nio.file.Paths.get(d, s"$name.txt"),
+        graft.Bench.canonicalPlan(df))
     }
   }
 

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.sources.Tables._
 
@@ -1107,16 +1107,27 @@ object Similarity {
     * (probe_id, vec_id, score_micro) after [[GraphRounds]] rounds at
     * width `beam` — [[graphTopK]] serves with [[GraphBeam]], the
     * tuning audit sweeps widths. */
-  private def beamSearchVisited(spark: SparkSession, dir: String,
+  private[graft] def beamSearchVisited(spark: SparkSession, dir: String,
       beamWidth: Int): DataFrame =
-    beamSearchOn(vecs(spark, dir), probes(spark, dir),
+    beamSearchAt(vecs(spark, dir), probes(spark, dir),
       stagedNeighborGraph(spark, dir), beamWidth)
+
+  /** [[beamSearchOn]] at one width, keyed by probe_id alone. */
+  private def beamSearchAt(corpus: DataFrame, probeSet: DataFrame,
+      edges: DataFrame, beamWidth: Int): DataFrame =
+    beamSearchOn(corpus, probeSet, edges, probeSet.select("probe_id"),
+      lit(beamWidth), beamWidth)
 
   /** the fully generic search core: `corpus` (vec_id, vd, vnrm),
     * `probeSet` (probe_id, pv, pnrm), `edges` (src, dst) over corpus
-    * ids; entry = the corpus min id. */
+    * ids; entry = the corpus min id. `seed` holds one row per search:
+    * its columns are the search key (probe_id, plus beam for the width
+    * sweep), and every round keeps the best `width` of each key, ranked
+    * at `widest` — so a search's trajectory depends only on its own
+    * width, whatever else rides the same loop. The visited set comes
+    * back keyed the same way, as (key…, vec_id, score_micro). */
   private def beamSearchOn(corpus: DataFrame, probeSet0: DataFrame,
-      edges0: DataFrame, beamWidth: Int): DataFrame = {
+      edges0: DataFrame, seed: DataFrame, width: Column, widest: Int): DataFrame = {
     // Round-invariant inputs are materialized ONCE (r15): without it
     // the loop re-planned the edge scan and the probe projection
     // (incl. its norm fold) every round. localCheckpoint holds them
@@ -1154,31 +1165,33 @@ object Similarity {
     // score(probe, vec): the SAME fold as every cosine here —
     // self-pairs included (the probe's own node can enter the beam;
     // its score replays as the same near-1.0 double in both engines)
+    val key = seed.columns.toSeq
     def topB(visited: DataFrame): DataFrame =
-      graft.plans.TopK.perKey(visited, Seq("probe_id"),
-          Seq("score_micro" -> false, "vec_id" -> true), beamWidth)
-        .select("probe_id", "vec_id")
+      graft.plans.TopK.perKey(visited, key,
+          Seq("score_micro" -> false, "vec_id" -> true), widest)
+        .filter(col("rank") <= width)
+        .select((key :+ "vec_id").map(col): _*)
     val entry = corpus.agg(min(col("vec_id")).as("vec_id"))
-    var visited = probeSet.select("probe_id").crossJoin(broadcast(entry))
+    var visited = seed.crossJoin(broadcast(entry))
       .join(corpus, "vec_id").join(broadcast(probeSet), "probe_id")
-      .select(col("probe_id"), col("vec_id"),
+      .select((key :+ "vec_id").map(col) :+
         floor(Vectors.cosinePre(col("pv"), col("vd"), col("pnrm"), col("vnrm"))
-          * lit(1e6)).cast("long").as("score_micro"))
+          * lit(1e6)).cast("long").as("score_micro"): _*)
     var beam = topB(visited)
     for (_ <- 1 to GraphRounds) {
       val expand = beam.join(edgesP, beam("vec_id") === edgesP("src"))
         .join(broadcast(probeSet), "probe_id")
-        .select(col("probe_id"), edgesP("dst").as("vec_id"),
+        .select(key.map(col) :+ edgesP("dst").as("vec_id") :+
           floor(Vectors.cosinePre(col("pv"), col("dvd"), col("pnrm"), col("dnrm"))
-            * lit(1e6)).cast("long").as("score_micro"))
+            * lit(1e6)).cast("long").as("score_micro"): _*)
       // eager checkpoint per round: visited feeds both the union and
       // the beam top-B — without it the plan tree grows per round
       // (the graph_kcore lesson). The relation is tiny: ≤ 1 +
-      // rounds·beam·M rows per probe, so the checkpoint is
-      // O(probes·beam·M), never corpus.
+      // rounds·beam·M rows per search, so the checkpoint is
+      // O(searches·beam·M), never corpus.
       visited = visited.unionByName(expand)
-        .repartition(col("probe_id"))
-        .groupBy("probe_id", "vec_id")
+        .repartition(key.map(col): _*)
+        .groupBy((key :+ "vec_id").map(col): _*)
         .agg(min(col("score_micro")).as("score_micro"))
         .localCheckpoint(true)
       beam = topB(visited)
@@ -1237,7 +1250,7 @@ object Similarity {
   private[graft] def insertLinksFor(spark: SparkSession, dir: String,
       arrivals: DataFrame): DataFrame = {
     val base = vecs(spark, dir).filter(col("vec_id") % 53 =!= 0)
-    val visited = beamSearchOn(base, arrivals,
+    val visited = beamSearchAt(base, arrivals,
       stagedBaseGraph(spark, dir), GraphInsertBeam)
     graft.plans.TopK.perKey(visited, Seq("probe_id"),
         Seq("score_micro" -> false, "vec_id" -> true), GraphM)
@@ -1303,7 +1316,7 @@ object Similarity {
     // staged visited set instead of re-running the beam
     val lazyMode = grade("lazy_tombstone", stagedGraphVisited(spark, dir))
     val hardMode = grade("hard_removed",
-      beamSearchOn(all.filter(col("vec_id") % 41 =!= 0), pr,
+      beamSearchAt(all.filter(col("vec_id") % 41 =!= 0), pr,
         edges.filter(col("src") % 41 =!= 0 && col("dst") % 41 =!= 0),
         GraphBeam))
     hardMode.unionByName(lazyMode)
@@ -1333,7 +1346,7 @@ object Similarity {
     // (beam, probe) at the max width, keeping rank ≤ beam — 8 jobs
     // total instead of 8 per width (measured 7.1 → ~2.6 s at sf0.1;
     // the per-round scheduling, not the math, is the replay cost)
-    val visited = beamSearchTagged(spark, dir, GraphTuningBeams.map(_.toLong))
+    val visited = beamSweepVisited(spark, dir, GraphTuningBeams)
     val topk = graft.plans.TopK.perKey(
         visited.filter(col("vec_id") =!= col("probe_id")),
         Seq("beam", "probe_id"), Seq("score_micro" -> false, "vec_id" -> true), K)
@@ -1353,52 +1366,16 @@ object Similarity {
       .orderBy("beam")
   }
 
-  /** the multi-width search: one round loop over a (beam, probe)
-    * keyed relation — identical per-width trajectories to
-    * [[beamSearchVisited]] run separately (the prune keeps rank ≤
-    * that row's own beam). */
-  private def beamSearchTagged(spark: SparkSession, dir: String,
-      widths: Seq[Long]): DataFrame = {
+  /** the beam-width sweep: every width of `widths` rides ONE round
+    * loop, keyed by (beam, probe_id), each with the trajectory
+    * [[beamSearchVisited]] gives it alone. */
+  private[graft] def beamSweepVisited(spark: SparkSession, dir: String,
+      widths: Seq[Int]): DataFrame = {
     import spark.implicits._
-    val v = vecs(spark, dir)
-    // round-invariant inputs materialized once, adjacency staged WITH
-    // the destination payload, anti-join replaced by re-score +
-    // one-exchange dedup — see [[beamSearchOn]] for the r16 loop
-    // flattening rationale; here the (beam, probe) pair is the key.
-    val pr = probes(spark, dir).localCheckpoint()
-    val edges0 = stagedNeighborGraph(spark, dir)
-    val edgesP = edges0.join(v, edges0("dst") === v("vec_id"))
-      .select(edges0("src"), edges0("dst"),
-        v("vd").as("dvd"), v("vnrm").as("dnrm"))
-      .localCheckpoint()
-    val beams = widths.toDF("beam")
-    def topB(visited: DataFrame): DataFrame =
-      graft.plans.TopK.perKey(visited, Seq("beam", "probe_id"),
-          Seq("score_micro" -> false, "vec_id" -> true), widths.max.toInt)
-        .filter(col("rank") <= col("beam"))
-        .select("beam", "probe_id", "vec_id")
-    val entry = vecs(spark, dir).agg(min(col("vec_id")).as("vec_id"))
-    var visited = pr.select("probe_id")
-      .crossJoin(broadcast(beams)).crossJoin(broadcast(entry))
-      .join(v, "vec_id").join(broadcast(pr), "probe_id")
-      .select(col("beam"), col("probe_id"), col("vec_id"),
-        floor(Vectors.cosinePre(col("pv"), col("vd"), col("pnrm"), col("vnrm"))
-          * lit(1e6)).cast("long").as("score_micro"))
-    var beam = topB(visited)
-    for (_ <- 1 to GraphRounds) {
-      val expand = beam.join(edgesP, beam("vec_id") === edgesP("src"))
-        .join(broadcast(pr), "probe_id")
-        .select(col("beam"), col("probe_id"), edgesP("dst").as("vec_id"),
-          floor(Vectors.cosinePre(col("pv"), col("dvd"), col("pnrm"), col("dnrm"))
-            * lit(1e6)).cast("long").as("score_micro"))
-      visited = visited.unionByName(expand)
-        .repartition(col("beam"), col("probe_id"))
-        .groupBy("beam", "probe_id", "vec_id")
-        .agg(min(col("score_micro")).as("score_micro"))
-        .localCheckpoint(true)
-      beam = topB(visited)
-    }
-    visited
+    val pr = probes(spark, dir)
+    beamSearchOn(vecs(spark, dir), pr, stagedNeighborGraph(spark, dir),
+      widths.map(_.toLong).toDF("beam").crossJoin(pr.select("probe_id")),
+      col("beam"), widths.max)
   }
 
   /** Recall@K of the graph search vs the exact ground truth — the

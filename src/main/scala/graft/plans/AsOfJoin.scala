@@ -210,12 +210,7 @@ object AsOf {
       s"as-of join requires disjoint column names across sides; " +
         s"shared: ${dup.toSeq.sorted.mkString(", ")}")
     val spark = left.sparkSession
-    AsOfStrategy.synchronized {
-      if (!spark.experimental.extraStrategies.contains(AsOfStrategy)) {
-        spark.experimental.extraStrategies =
-          spark.experimental.extraStrategies :+ AsOfStrategy
-      }
-    }
+    org.apache.spark.sql.GraftFunctions.addStrategy(spark, AsOfStrategy)
     // fresh exprIds on the right: both sides often derive from the
     // same scan, and duplicate attribute ids across children would
     // mis-bind the output projection

@@ -212,12 +212,7 @@ object Band {
       s"band join requires disjoint column names across sides; " +
         s"shared: ${dup.toSeq.sorted.mkString(", ")}")
     val spark = left.sparkSession
-    BandJoinStrategy.synchronized {
-      if (!spark.experimental.extraStrategies.contains(BandJoinStrategy)) {
-        spark.experimental.extraStrategies =
-          spark.experimental.extraStrategies :+ BandJoinStrategy
-      }
-    }
+    org.apache.spark.sql.GraftFunctions.addStrategy(spark, BandJoinStrategy)
     // fresh exprIds on the right: both sides often derive from the
     // same scan, and duplicate attribute ids across children would
     // mis-bind the output projection

@@ -342,15 +342,7 @@ object TopK {
              order: Seq[(String, Boolean)], k: Int,
              maxKeysPerPartition: Int = 1 << 20): DataFrame = {
     val spark = df.sparkSession
-    // register the strategy once per session (public hook); synchronized
-    // — extraStrategies read-modify-write is not atomic and two threads
-    // racing here could drop one registration.
-    TopKStrategy.synchronized {
-      if (!spark.experimental.extraStrategies.contains(TopKStrategy)) {
-        spark.experimental.extraStrategies =
-          spark.experimental.extraStrategies :+ TopKStrategy
-      }
-    }
+    org.apache.spark.sql.GraftFunctions.addStrategy(spark, TopKStrategy)
     val analyzed = df.queryExecution.analyzed
     val resolve = analyzed.output.map(a => a.name -> a).toMap
     val groupExprs = keys.map(resolve(_))

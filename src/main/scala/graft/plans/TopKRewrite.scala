@@ -105,13 +105,9 @@ object GraftOptimizations {
     * installed rule (last call wins — previously a differing bound
     * was silently ignored). */
   def install(spark: SparkSession, maxKeysPerPartition: Int = 1 << 20): Unit =
-    GraftOptimizations.synchronized {
-      if (!spark.experimental.extraStrategies.contains(TopKStrategy)) {
-        spark.experimental.extraStrategies =
-          spark.experimental.extraStrategies :+ TopKStrategy
-      }
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations.filterNot(_.isInstanceOf[TopKRewrite]) :+
-          new TopKRewrite(maxKeysPerPartition)
+    org.apache.spark.sql.GraftFunctions.withHooks(spark) { m =>
+      org.apache.spark.sql.GraftFunctions.addStrategy(spark, TopKStrategy)
+      m.extraOptimizations = m.extraOptimizations.filterNot(_.isInstanceOf[TopKRewrite]) :+
+        new TopKRewrite(maxKeysPerPartition)
     }
 }

@@ -294,22 +294,14 @@ object SourcesSinks {
   def int96Timestamps(spark: SparkSession, dir: String): DataFrame = {
     val path = int96Path(spark, dir)
     if (!new java.io.File(s"$path/_SUCCESS").isFile) {
-      val prevType = spark.conf.getOption("spark.sql.parquet.outputTimestampType")
-      val prevRebase = spark.conf.getOption("spark.sql.parquet.int96RebaseModeInWrite")
-      spark.conf.set("spark.sql.parquet.outputTimestampType", "INT96")
-      spark.conf.set("spark.sql.parquet.int96RebaseModeInWrite", "CORRECTED")
-      def restore(key: String, prev: Option[String]): Unit = prev match {
-        case Some(t) => spark.conf.set(key, t)
-        case None => spark.conf.unset(key)
-      }
-      try events(spark, dir)
+      // the writer confs live on a child session, never on the caller's
+      val writer = GraftFunctions.childSession(spark,
+        "spark.sql.parquet.outputTimestampType" -> "INT96",
+        "spark.sql.parquet.int96RebaseModeInWrite" -> "CORRECTED")
+      events(writer, dir)
         .select(col("event_id"), col("event_type"),
           timestamp_micros(expr("ts DIV 1000")).as("ts96"))
         .write.mode("overwrite").parquet(path)
-      finally {
-        restore("spark.sql.parquet.outputTimestampType", prevType)
-        restore("spark.sql.parquet.int96RebaseModeInWrite", prevRebase)
-      }
     }
     spark.read.parquet(path)
       .groupBy("event_type")
@@ -353,9 +345,9 @@ object SourcesSinks {
     * decodes to a DIFFERENT instant depending on which calendar the
     * reader assumes. The fixture is an Impala-faithful file: written
     * through parquet-mr DIRECTLY (no Spark footer metadata, so the
-    * reader cannot auto-detect the calendar and
-    * int96RebaseModeInRead genuinely governs — a Spark-written
-    * LEGACY file carries a marker that silently overrides the conf),
+    * reader cannot auto-detect the calendar and the read's rebase
+    * mode genuinely governs — a Spark-written LEGACY file carries a
+    * marker that silently overrides it),
     * holding year-1500 timestamps INT96-encoded via [[hybridInt96]].
     * Read back under LEGACY the values are EXACT (the reader inverts
     * the hybrid composition); under CORRECTED the same bytes surface
@@ -405,24 +397,15 @@ object SourcesSinks {
         writer.write(g)
       } finally writer.close()
     }
-    // one aggregate per rebase mode; localCheckpoint() materializes
-    // INSIDE the conf window (the mode must bind to each scan) and
-    // the conf restores symmetrically
-    def aggUnder(mode: String): DataFrame = {
-      val key = "spark.sql.parquet.int96RebaseModeInRead"
-      val prev = spark.conf.getOption(key)
-      spark.conf.set(key, mode)
-      try spark.read.parquet(path)
+    // one aggregate per rebase mode; the per-read option binds the
+    // mode to its own scan and overrides the session's
+    // int96RebaseModeInRead
+    def aggUnder(mode: String): DataFrame =
+      spark.read.option("int96RebaseMode", mode).parquet(path)
         .groupBy("event_type")
         .agg(count(lit(1)).as("n_events"),
           min(expr("unix_micros(ts96)")).as("min_us"),
           max(expr("unix_micros(ts96)")).as("max_us"))
-        .localCheckpoint()
-      finally prev match {
-        case Some(t) => spark.conf.set(key, t)
-        case None => spark.conf.unset(key)
-      }
-    }
     val legacy = aggUnder("LEGACY")
     val corrected = aggUnder("CORRECTED")
       .select(col("event_type"), col("min_us").as("c_min_us"),

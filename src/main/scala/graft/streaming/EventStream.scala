@@ -1,22 +1,23 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Encoders}
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, ListState, MapState, OutputMode, StatefulProcessor, TTLConfig, TimeMode, TimerValues, ValueState}
+import org.apache.spark.sql.{Dataset, Encoders}
+import org.apache.spark.sql.streaming.{ListState, MapState, OutputMode, StatefulProcessor, TTLConfig, TimeMode, TimerValues, ValueState}
 
 import graft.functions.ExactDecimalCast
 
-/** Structured Streaming pipelines over the events stream — the
-  * streaming side of §2.6 (Analytic.tumblingWindow / sessionize are
-  * the batch analogs the driver oracle-checks; these are the
-  * readStream-shaped versions, covered by StreamingSpec with a
-  * MemoryStream source and memory sink).
+/** The transformWithState processors over the typed events stream —
+  * arbitrary-state v2, each with a batch analog in Analytic that
+  * StreamingSpec checks it against over a MemoryStream source.
+  * [[FunnelProcessor]] is also the operator of the oracle-gated
+  * `stream_cep_funnels` row ([[StreamQueries.cepFunnels]]); the
+  * windowed, dedup, enrichment and interval-join pipelines exist once,
+  * as the bounded-replay rows in [[StreamQueries]].
   *
-  * Scale design: the watermark bounds state for the windowed agg
-  * (late data beyond 2h is dropped, closed windows are evicted); the
-  * sessionizer keeps one open session per user in the state store and
-  * closes it either by an observed gap (in-batch) or by event-time
-  * timeout once the watermark passes last-event + gap.
+  * Scale design: state is per key in the state store (the RocksDB
+  * provider this API requires), so it is O(active users), never
+  * O(events); the sessionizer keeps one open session per user and
+  * closes it either by an observed gap (in-batch) or by an event-time
+  * timer once the watermark passes last-event + gap.
   */
 object EventStream {
 
@@ -30,106 +31,6 @@ object EventStream {
 
   /** per-user state: sessions emitted so far + the open session. */
   case class UserState(counter: Long, n: Long, startSec: Long, lastSec: Long, value: Double)
-
-  /** Watermarked streaming exact dedup on event_id — the streaming
-    * twin of Dedup.exactDedup. Duplicates arriving within the
-    * watermark horizon are dropped; dedup state is evicted once the
-    * watermark passes, so state stays bounded by (arrival rate ×
-    * horizon) no matter how long the stream runs — the property that
-    * makes exact dedup feasible on an unbounded 100 TB/day feed,
-    * where an unwatermarked dropDuplicates would grow state forever. */
-  def dedupe(events: DataFrame): DataFrame =
-    events
-      .withWatermark("ts", "2 hours")
-      .dropDuplicatesWithinWatermark("event_id")
-
-  /** Stream-static enrichment join: each streaming event picks up its
-    * user's attributes from a static (batch) dimension. Stateless —
-    * the static side is broadcast to every task and re-read per
-    * micro-batch; the stream side never buffers, so this costs the
-    * same as a map regardless of stream length. */
-  def enrich(events: DataFrame, userDim: DataFrame): DataFrame =
-    events.join(broadcast(userDim), Seq("user_id"), "left")
-      .select(col("event_id"), col("user_id"), col("segment"),
-        col("event_type"), col("value"))
-
-  /** Stream-stream interval join: purchases joined to the same
-    * user's clicks in the preceding hour, BOTH sides unbounded
-    * streams — the streaming twin of Analytic.rangeJoin. The
-    * watermarks plus the two-sided time constraint are what make
-    * this feasible at scale: they bound how long each side's rows
-    * stay in the join state store (a click older than the watermark
-    * + 1h can never match a future purchase and is evicted), so
-    * state stays proportional to the time horizon, not the stream
-    * length. */
-  def streamAttribution(clicks: DataFrame, purchases: DataFrame): DataFrame = {
-    val c = clicks
-      .select(col("user_id").as("c_user"), col("event_id").as("click_id"),
-        col("ts").as("c_ts"))
-      .withWatermark("c_ts", "2 hours")
-    val p = purchases
-      .select(col("user_id").as("p_user"), col("event_id").as("purchase_id"),
-        col("ts").as("p_ts"))
-      .withWatermark("p_ts", "2 hours")
-    p.join(c,
-      col("p_user") === col("c_user") &&
-        col("c_ts") >= col("p_ts") - expr("INTERVAL 1 HOUR") &&
-        col("c_ts") < col("p_ts"))
-      .select(col("purchase_id"), col("click_id"), col("p_user").as("user_id"),
-        (unix_timestamp(col("p_ts")) - unix_timestamp(col("c_ts"))).as("gap_sec"))
-  }
-
-  /** LEFT OUTER stream-stream interval join — the attribution shape
-    * that must also surface the NEGATIVE space ("purchases with no
-    * preceding click" — exactly the rows a conversion-quality monitor
-    * alerts on). Same state-eviction story as the inner form: the
-    * outer side's null-padded rows can only emit once the watermark
-    * proves no future click can match, so unmatched purchases arrive
-    * late by one watermark horizon but state stays bounded by the
-    * horizon. This delayed-null contract is the price of outer
-    * semantics on unbounded inputs, and is why the test advances the
-    * watermark with sentinels before asserting the unmatched set. */
-  def streamAttributionLeftOuter(clicks: DataFrame, purchases: DataFrame): DataFrame = {
-    val c = clicks
-      .select(col("user_id").as("c_user"), col("event_id").as("click_id"),
-        col("ts").as("c_ts"))
-      .withWatermark("c_ts", "2 hours")
-    val p = purchases
-      .select(col("user_id").as("p_user"), col("event_id").as("purchase_id"),
-        col("ts").as("p_ts"))
-      .withWatermark("p_ts", "2 hours")
-    p.join(c,
-      col("p_user") === col("c_user") &&
-        col("c_ts") >= col("p_ts") - expr("INTERVAL 1 HOUR") &&
-        col("c_ts") < col("p_ts"),
-      "leftOuter")
-      .select(col("purchase_id"), col("click_id"), col("p_user").as("user_id"),
-        (unix_timestamp(col("p_ts")) - unix_timestamp(col("c_ts"))).as("gap_sec"))
-  }
-
-  /** Tumbling 1-hour windowed counts with a 2h watermark — the
-    * streaming twin of Analytic.tumblingWindow. */
-  def hourly(events: DataFrame): DataFrame =
-    events
-      .withWatermark("ts", "2 hours")
-      .groupBy(window(col("ts"), "1 hour").as("win"), col("event_type"))
-      .agg(count(lit(1)).as("n_events"))
-      .select(unix_timestamp(col("win.start")).as("hour_sec"),
-        col("event_type"), col("n_events"))
-
-  /** Sliding 1-hour windows on a 30-minute slide with a 2h
-    * watermark — the streaming twin of Analytic.slidingWindow (the
-    * identical window() expression under readStream: each event
-    * expands into width/slide = 2 windows BEFORE the agg, state is
-    * per open window and evicted once the watermark passes). */
-  def sliding(events: DataFrame): DataFrame =
-    events
-      .withWatermark("ts", "2 hours")
-      .groupBy(window(col("ts"), "1 hour", "30 minutes").as("win"), col("event_type"))
-      .agg(count(lit(1)).as("n_events"),
-        sum(col("value").cast("decimal(18,2)")).cast("double").as("sum_value"))
-      .select(unix_timestamp(col("win.start")).as("win_start"),
-        col("event_type"), col("n_events"), col("sum_value"))
 
   /** per-user lifetime profile emitted by the transformWithState
     * processor; value travels as exact CENTS so the final /100.0 is
@@ -335,11 +236,11 @@ object EventStream {
         OutputMode.Update())
   }
 
-  /** Gap-based sessionizer on the arbitrary-state v2 TIMER API:
-    * same semantics as [[sessionize]] (the flatMapGroupsWithState
-    * form below), but inactivity is detected by an EVENT-TIME TIMER
-    * registered at lastSec + gap — the v2 replacement for
-    * GroupStateTimeout. Each batch folds its rows (sorted by event
+  /** Gap-based sessionizer on the arbitrary-state v2 TIMER API — the
+    * streaming twin of Analytic.sessionize (same session numbering:
+    * sessions are indexed per user in event-time order). Inactivity is
+    * detected by an EVENT-TIME TIMER registered at lastSec + gap. Each
+    * batch folds its rows (sorted by event
     * time, closing sessions at in-batch gaps), then re-arms exactly
     * one timer for the open session's quiet deadline (stale timers
     * deleted first — a timer outliving its session would close the
@@ -348,7 +249,7 @@ object EventStream {
     * is O(users with an open session) and every session closes even
     * if its user never returns — the property a lifetime-unbounded
     * stream needs. StreamingSpec pins the full session set to the
-    * batch sessionize output, same as the v1 test. */
+    * batch sessionize output. */
   class SessionizerV2Processor(gapSec: Long = 1800)
       extends StatefulProcessor[Long, Ev, SessionOut] {
     @transient private var open: ValueState[UserState] = _
@@ -407,52 +308,5 @@ object EventStream {
       .groupByKey(_.user_id)
       .transformWithState(new SessionizerV2Processor(gapSec),
         TimeMode.EventTime(), OutputMode.Append())
-  }
-
-  /** Gap-based sessionizer (30-min inactivity) via
-    * flatMapGroupsWithState with event-time timeout — the streaming
-    * twin of Analytic.sessionize (same session numbering: sessions
-    * are indexed per user in event-time order). */
-  def sessionize(events: Dataset[Ev], gapSec: Long = 1800): Dataset[SessionOut] = {
-    import events.sparkSession.implicits._
-
-    def close(userId: Long, st: UserState): SessionOut =
-      SessionOut(userId, st.counter + 1, st.n, st.startSec, st.lastSec,
-        // rounded to cents as the batch twin's DECIMAL(18,2) cast rounds
-        ExactDecimalCast.halfUpUnscaled(st.value, 2) / 100.0)
-
-    def fn(userId: Long, evs: Iterator[Ev], state: GroupState[UserState]): Iterator[SessionOut] = {
-      if (evs.isEmpty && state.hasTimedOut) {
-        val out = state.getOption.map(close(userId, _)).iterator
-        state.remove()
-        return out
-      }
-      val sorted = evs.toSeq.sortBy(e => (e.ts.getTime, e.event_id))
-      var open = state.getOption
-      val closed = Seq.newBuilder[SessionOut]
-      for (e <- sorted) {
-        val sec = e.ts.getTime / 1000
-        open match {
-          case Some(st) if sec - st.lastSec <= gapSec =>
-            open = Some(st.copy(n = st.n + 1, lastSec = sec, value = st.value + e.value))
-          case Some(st) =>
-            closed += close(userId, st)
-            open = Some(UserState(st.counter + 1, 1, sec, sec, e.value))
-          case None =>
-            open = Some(UserState(0, 1, sec, sec, e.value))
-        }
-      }
-      open.foreach { st =>
-        state.update(st)
-        state.setTimeoutTimestamp((st.lastSec + gapSec) * 1000 + 1)
-      }
-      closed.result().iterator
-    }
-
-    events
-      .withWatermark("ts", "2 hours")
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState[UserState, SessionOut](
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout)(fn)
   }
 }

@@ -16,12 +16,11 @@ import scala.util.control.NonFatal
   * directory, so its result is deterministic and the driver's DuckDB
   * oracle can value-check it exactly like a batch query. This is the
   * bounded-replay discipline streaming deployments use for backfill
-  * and parity testing. Nothing here runs unbounded: EventStream's
-  * open-ended pipelines are separately written variants, covered by
-  * StreamingSpec over MemoryStream sources, and only [[cepFunnels]]
-  * shares an operator with them (EventStream.funnels). Reference
-  * analog: the scan pipeline of hdfs-parquet-scanner.h:1 feeding
-  * incremental consumers.
+  * and parity testing. Nothing here runs unbounded, and each pipeline
+  * exists only here; [[cepFunnels]] runs EventStream's FunnelProcessor,
+  * whose sibling processors StreamingSpec drives over MemoryStream
+  * sources. Reference analog: the scan pipeline of
+  * hdfs-parquet-scanner.h:1 feeding incremental consumers.
   *
   * Scale notes: in the update/append pipelines the watermark bounds
   * the stateful stores exactly as in the unbounded deployment (dedup

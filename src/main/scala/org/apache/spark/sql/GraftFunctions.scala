@@ -119,72 +119,48 @@ object GraftFunctions {
     loaded.synchronized(loaded.keys.toSeq)
   }
 
+  /** graft's native functions: (name, class, arity, builder over
+    * exactly `arity` argument expressions). */
+  private val functions: Seq[(String, Class[_], Int, Seq[Expression] => Expression)] = Seq(
+    ("graft_dot", classOf[graft.functions.ArrayDot], 2,
+      e => graft.functions.ArrayDot(e(0), e(1))),
+    ("graft_pq_encode", classOf[graft.functions.PqEncode], 4,
+      e => graft.functions.PqEncode(e(0), e(1), e(2), e(3))),
+    ("graft_pq_adc", classOf[graft.functions.PqAdc], 3,
+      e => graft.functions.PqAdc(e(0), e(1), e(2))),
+    ("graft_argmax_cell", classOf[graft.functions.ArgMaxCell], 4,
+      e => graft.functions.ArgMaxCell(e(0), e(1), e(2), e(3))),
+    ("graft_minhash_text", classOf[graft.functions.MinHashText], 1,
+      e => graft.functions.MinHashText(e.head)),
+    ("graft_minhash_sig", classOf[graft.functions.MinHashSig], 1,
+      e => graft.functions.MinHashSig(e.head).toAggregateExpression()))
+
   def register(spark: SparkSession): Unit = {
     val registry = spark.sessionState.functionRegistry
-    val dot = FunctionIdentifier("graft_dot")
-    if (!registry.functionExists(dot)) {
-      registry.registerFunction(
-        dot,
-        new ExpressionInfo(classOf[graft.functions.ArrayDot].getName, "graft_dot"),
-        (exprs: Seq[Expression]) => {
-          requireArity("graft_dot", exprs, 2)
-          graft.functions.ArrayDot(exprs(0), exprs(1))
-        })
+    for ((name, cls, arity, build) <- functions) {
+      val id = FunctionIdentifier(name)
+      if (!registry.functionExists(id))
+        registry.registerFunction(id, new ExpressionInfo(cls.getName, name),
+          (exprs: Seq[Expression]) => { requireArity(name, exprs, arity); build(exprs) })
     }
-    val pqe = FunctionIdentifier("graft_pq_encode")
-    if (!registry.functionExists(pqe)) {
-      registry.registerFunction(
-        pqe,
-        new ExpressionInfo(classOf[graft.functions.PqEncode].getName, "graft_pq_encode"),
-        (exprs: Seq[Expression]) => {
-          requireArity("graft_pq_encode", exprs, 4)
-          graft.functions.PqEncode(exprs(0), exprs(1), exprs(2), exprs(3))
-        })
-    }
-    val adc = FunctionIdentifier("graft_pq_adc")
-    if (!registry.functionExists(adc)) {
-      registry.registerFunction(
-        adc,
-        new ExpressionInfo(classOf[graft.functions.PqAdc].getName, "graft_pq_adc"),
-        (exprs: Seq[Expression]) => {
-          requireArity("graft_pq_adc", exprs, 3)
-          graft.functions.PqAdc(exprs(0), exprs(1), exprs(2))
-        })
-    }
-    val amc = FunctionIdentifier("graft_argmax_cell")
-    if (!registry.functionExists(amc)) {
-      registry.registerFunction(
-        amc,
-        new ExpressionInfo(classOf[graft.functions.ArgMaxCell].getName, "graft_argmax_cell"),
-        (exprs: Seq[Expression]) => {
-          requireArity("graft_argmax_cell", exprs, 4)
-          graft.functions.ArgMaxCell(exprs(0), exprs(1), exprs(2), exprs(3))
-        })
-    }
-    val mtext = FunctionIdentifier("graft_minhash_text")
-    if (!registry.functionExists(mtext)) {
-      registry.registerFunction(
-        mtext,
-        new ExpressionInfo(classOf[graft.functions.MinHashText].getName, "graft_minhash_text"),
-        (exprs: Seq[Expression]) => {
-          requireArity("graft_minhash_text", exprs, 1)
-          graft.functions.MinHashText(exprs.head)
-        })
-    }
-    val sig = FunctionIdentifier("graft_minhash_sig")
-    if (!registry.functionExists(sig)) {
-      registry.registerFunction(
-        sig,
-        new ExpressionInfo(classOf[graft.functions.MinHashSig].getName, "graft_minhash_sig"),
-        (exprs: Seq[Expression]) => {
-          requireArity("graft_minhash_sig", exprs, 1)
-          graft.functions.MinHashSig(exprs.head).toAggregateExpression()
-        })
-    }
-    val methods = spark.sessionState.experimentalMethods
-    methods.synchronized {
-      if (!methods.extraOptimizations.contains(graft.functions.ExactDecimalCastRule))
-        methods.extraOptimizations :+= graft.functions.ExactDecimalCastRule
+    withHooks(spark) { m =>
+      if (!m.extraOptimizations.contains(graft.functions.ExactDecimalCastRule))
+        m.extraOptimizations :+= graft.functions.ExactDecimalCastRule
     }
   }
+
+  /** Runs `f` on the session's experimental hooks under their one
+    * lock. `extraStrategies` and `extraOptimizations` are plain vars,
+    * so every read-modify-write of them goes through here; two threads
+    * registering on one session then keep both registrations. */
+  def withHooks[T](spark: SparkSession)(f: ExperimentalMethods => T): T = {
+    val m = spark.sessionState.experimentalMethods
+    m.synchronized(f(m))
+  }
+
+  /** Adds `strategy` to the session's planner strategies, once. */
+  def addStrategy(spark: SparkSession, strategy: execution.SparkStrategy): Unit =
+    withHooks(spark) { m =>
+      if (!m.extraStrategies.contains(strategy)) m.extraStrategies :+= strategy
+    }
 }

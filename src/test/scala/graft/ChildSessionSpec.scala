@@ -6,7 +6,8 @@ import org.apache.spark.sql.functions._
 /** `GraftFunctions.childSession`: graft's session confs and then the
   * caller's land on the child and not on the parent, graft's functions
   * resolve in the child, and a stream's per-start clone of a replay
-  * session keeps artifact isolation off. */
+  * session keeps artifact isolation off. Also graft's registrations on
+  * a session's planner hooks, which hold one lock per session. */
 class ChildSessionSpec extends SparkSpec {
   private val Isolation = "spark.sql.artifact.isolation.enabled"
 
@@ -54,5 +55,40 @@ class ChildSessionSpec extends SparkSpec {
       s.catalog.dropTempView(name)
       queries.SourcesSinks.deleteRecursively(dir)
     }
+  }
+
+  test("concurrent registrations on one session keep each strategy and rule exactly once") {
+    import graft.plans._
+    val failures = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]
+    for (_ <- 1 to 50) {
+      val s = spark.newSession()
+      val l = s.range(1).select(col("id").as("k"), col("id").as("t"))
+      val r = s.range(1).select(col("id").as("rk"), col("id").as("rt"))
+      val registrations = Seq[() => Any](
+        () => GraftFunctions.register(s),
+        () => GraftOptimizations.install(s),
+        () => TopK.perKey(l, Seq("k"), Seq("t" -> true), 1),
+        () => AsOf.join(l, r, Seq("k" -> "rk"), "t", "rt", Nil),
+        () => Band.join(l, r, Seq("k" -> "rk"), "t", "rt", -1L, 0L))
+      val go = new java.util.concurrent.CountDownLatch(1)
+      // each thread registers everything, starting at its own entry
+      val threads = (0 until 4).map { i =>
+        new Thread(() =>
+          try {
+            go.await()
+            (registrations.drop(i) ++ registrations.take(i)).foreach(_())
+          } catch { case t: Throwable => failures.add(t) })
+      }
+      threads.foreach(_.start())
+      go.countDown()
+      threads.foreach(_.join())
+      val m = s.experimental
+      for (strategy <- Seq(TopKStrategy, AsOfStrategy, BandJoinStrategy))
+        assert(m.extraStrategies.count(_ == strategy) == 1, m.extraStrategies)
+      assert(m.extraOptimizations.count(_ == graft.functions.ExactDecimalCastRule) == 1,
+        m.extraOptimizations)
+      assert(m.extraOptimizations.count(_.isInstanceOf[TopKRewrite]) == 1, m.extraOptimizations)
+    }
+    assert(failures.isEmpty, failures)
   }
 }

@@ -132,6 +132,21 @@ class SimilaritySpec extends SparkSpec {
     assert(!plan.contains("Window"), plan.take(1500))
   }
 
+  test("beam sweep: each width's visited set equals that width's search alone") {
+    import operators.Similarity.{GraphBeam, GraphTuningBeams}
+    def visited(df: DataFrame): Set[(Long, Long, Long)] =
+      df.select("probe_id", "vec_id", "score_micro").collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
+    val sweep = operators.Similarity.beamSweepVisited(spark, sf, GraphTuningBeams)
+    // the widest width, which the sweep ranks at, and the narrowest,
+    // which only its rank cut separates from the widest
+    for (w <- Seq(GraphBeam, GraphTuningBeams.min)) {
+      val alone = visited(operators.Similarity.beamSearchVisited(spark, sf, w))
+      assert(alone.nonEmpty)
+      assert(visited(sweep.filter(col("beam") === w)) == alone, s"width $w")
+    }
+  }
+
   test("flattened beam: served scores equal cosines recomputed from raw vectors") {
     // r16 internals change: the beam loop scores expansions from the
     // DESTINATION PAYLOAD staged on the adjacency (not a per-round

@@ -137,9 +137,9 @@ class SourcesSpec extends SparkSpec {
 
   test("int96 timestamps: the footer's physical type really is INT96") {
     import org.apache.spark.sql.functions._
-    // the writer toggles outputTimestampType AND int96RebaseModeInWrite;
-    // BOTH must restore to their pre-call values (round-14 advice: the
-    // rebase mode leaked). Plant a sentinel and force the write branch.
+    // the writer's outputTimestampType and int96RebaseModeInWrite must
+    // never reach the caller's session (an earlier writer leaked the
+    // rebase mode). Plant a sentinel and force the write branch.
     queries.SourcesSinks.deleteRecursively(
       new java.io.File(queries.SourcesSinks.int96Path(spark, sf)))
     spark.conf.set("spark.sql.parquet.int96RebaseModeInWrite", "LEGACY")
@@ -221,6 +221,22 @@ class SourcesSpec extends SparkSpec {
       assert(!keys.stream().anyMatch(_.startsWith("org.apache.spark")),
         s"fixture carries Spark writer metadata: $keys")
     } finally reader.close()
+  }
+
+  test("int96 legacy rebase plans one fixture read per mode and no checkpoint") {
+    import org.apache.spark.sql.execution.LogicalRDD
+    import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+    val plan = SparkEntry.queries("src_int96_legacy_rebase")(spark, sf)
+      .queryExecution.optimizedPlan
+    assert(plan.collect { case r: LogicalRDD => r }.isEmpty, plan.treeString)
+    val fixture = new java.io.File(queries.SourcesSinks.int96LegacyPath(spark, sf)).getCanonicalPath
+    // each scan of the fixture carries its own rebase mode as a read option
+    val modes = plan.collect { case l: LogicalRelation => l.relation }.collect {
+      case r: HadoopFsRelation
+          if r.location.rootPaths.exists(p => new java.io.File(p.toUri.getPath).getCanonicalPath == fixture) =>
+        r.options.collectFirst { case (k, v) if k.equalsIgnoreCase("int96RebaseMode") => v }
+    }
+    assert(modes.sortBy(_.toString) == Seq(Some("CORRECTED"), Some("LEGACY")), plan.treeString)
   }
 
   test("csv corrupt: FAILFAST aborts on the same dirty payload PERMISSIVE survives") {

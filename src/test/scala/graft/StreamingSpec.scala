@@ -26,154 +26,6 @@ class StreamingSpec extends SparkSpec {
   private def sentinel(offsetHours: Int): Ev =
     Ev(-1L, -1L, java.sql.Timestamp.valueOf(s"2030-01-01 0${offsetHours}:00:00"), "x", 0.0)
 
-  test("streaming sessionizer matches the batch sessionize analog") {
-    import spark.implicits._
-    val input = MemoryStream[Ev](spark)
-    val q = EventStream.sessionize(input.toDS())
-      .writeStream.format("memory").queryName("sess_out").outputMode("append").start()
-    try {
-      input.addData(loadEvents())
-      q.processAllAvailable()
-      // two extra batches: first advances max event time, second lets
-      // the watermark (maxEventTime - 2h) pass every open session
-      input.addData(Seq(sentinel(1))); q.processAllAvailable()
-      input.addData(Seq(sentinel(2))); q.processAllAvailable()
-      val got = spark.table("sess_out").filter(col("user_id") >= 0)
-        .select("user_id", "session_id", "n_events", "start_sec", "end_sec")
-        .collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4)))
-        .toSet
-      val want = queries.Analytic.sessionize(spark, sf)
-        .select("user_id", "session_id", "n_events", "start_sec", "end_sec")
-        .collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4)))
-        .toSet
-      assert(want.nonEmpty)
-      assert(got == want,
-        s"missing=${(want -- got).take(5)} extra=${(got -- want).take(5)}")
-    } finally q.stop()
-  }
-
-  test("streaming dedup drops duplicate event_ids and keeps each event once") {
-    import spark.implicits._
-    val events = loadEvents().take(2000)
-    val input = MemoryStream[Ev](spark)
-    val q = EventStream.dedupe(input.toDF())
-      .writeStream.format("memory").queryName("dedup_out").outputMode("append").start()
-    try {
-      // feed every event twice (same batch) plus a re-delivery batch
-      input.addData(events ++ events)
-      q.processAllAvailable()
-      input.addData(events.take(500)) // late re-delivery within watermark
-      q.processAllAvailable()
-      val got = spark.table("dedup_out").select("event_id").collect().map(_.getLong(0))
-      assert(got.length == got.distinct.length, "emitted a duplicate event_id")
-      assert(got.toSet == events.map(_.event_id).toSet)
-    } finally q.stop()
-  }
-
-  test("stream-static enrichment matches the batch join") {
-    import spark.implicits._
-    val dim = graft.sources.Tables.events(spark, sf)
-      .select("user_id").distinct()
-      .withColumn("segment", concat(lit("seg_"), col("user_id") % 4))
-    val events = loadEvents().take(2000)
-    val input = MemoryStream[Ev](spark)
-    val q = EventStream.enrich(input.toDF(), dim)
-      .writeStream.format("memory").queryName("enrich_out").outputMode("append").start()
-    try {
-      input.addData(events)
-      q.processAllAvailable()
-      val got = spark.table("enrich_out")
-        .select("event_id", "segment").collect()
-        .map(r => r.getLong(0) -> r.getString(1)).toMap
-      assert(got.size == events.length)
-      assert(events.forall(e => got(e.event_id) == s"seg_${e.user_id % 4}"))
-    } finally q.stop()
-  }
-
-  test("stream-stream interval join matches the batch range join") {
-    import spark.implicits._
-    val events = loadEvents()
-    val clicksIn = MemoryStream[Ev](spark)
-    val purchasesIn = MemoryStream[Ev](spark)
-    val q = EventStream.streamAttribution(clicksIn.toDF(), purchasesIn.toDF())
-      .writeStream.format("memory").queryName("ss_join").outputMode("append").start()
-    try {
-      clicksIn.addData(events.filter(_.event_type == "click"))
-      purchasesIn.addData(events.filter(_.event_type == "purchase"))
-      q.processAllAvailable()
-      val got = spark.table("ss_join")
-        .groupBy("purchase_id").count().collect()
-        .map(r => r.getLong(0) -> r.getLong(1)).toMap
-      val want = queries.Analytic.rangeJoin(spark, sf).collect()
-        .map(r => r.getLong(0) -> r.getLong(1)).toMap
-      assert(want.nonEmpty)
-      assert(got == want,
-        s"missing=${(want.toSet -- got.toSet).take(3)} extra=${(got.toSet -- want.toSet).take(3)}")
-    } finally q.stop()
-  }
-
-  test("left-outer interval join: matches equal inner join, unmatched purchases null-pad") {
-    import spark.implicits._
-    val events = loadEvents()
-    val clicksIn = MemoryStream[Ev](spark)
-    val purchasesIn = MemoryStream[Ev](spark)
-    val q = EventStream.streamAttributionLeftOuter(clicksIn.toDF(), purchasesIn.toDF())
-      .writeStream.format("memory").queryName("ss_ljoin").outputMode("append").start()
-    try {
-      clicksIn.addData(events.filter(_.event_type == "click"))
-      purchasesIn.addData(events.filter(_.event_type == "purchase"))
-      q.processAllAvailable()
-      // outer nulls emit only once the watermark proves no future
-      // click can match — advance it on BOTH inputs (watermark is the
-      // min across them)
-      for (h <- 1 to 2) {
-        clicksIn.addData(Seq(sentinel(h)))
-        purchasesIn.addData(Seq(sentinel(h)))
-        q.processAllAvailable()
-      }
-      val out = spark.table("ss_ljoin").filter(col("purchase_id") >= 0).collect()
-      val gotMatched = out.filter(!_.isNullAt(1))
-        .groupBy(_.getLong(0)).view.mapValues(_.length.toLong).toMap
-      val want = queries.Analytic.rangeJoin(spark, sf).collect()
-        .map(r => r.getLong(0) -> r.getLong(1)).toMap
-      assert(gotMatched == want, "matched side must equal the inner join")
-      // the null-padded rows are exactly the purchases the batch join
-      // never returns, each exactly once, with null click and gap
-      val gotUnmatched = out.filter(_.isNullAt(1))
-      assert(gotUnmatched.forall(_.isNullAt(3)))
-      assert(gotUnmatched.groupBy(_.getLong(0)).forall(_._2.length == 1))
-      val allPurchases = events.filter(_.event_type == "purchase").map(_.event_id).toSet
-      assert(gotUnmatched.map(_.getLong(0)).toSet == allPurchases -- want.keySet)
-      assert(gotUnmatched.nonEmpty, "corpus has no click-less purchase — test is vacuous")
-    } finally q.stop()
-  }
-
-  test("Trigger.AvailableNow drains the backlog in bounded batches and stops itself") {
-    import spark.implicits._
-    import org.apache.spark.sql.streaming.Trigger
-    val input = MemoryStream[Ev](spark)
-    input.addData(loadEvents())
-    val q = EventStream.hourly(input.toDF())
-      .writeStream.format("memory").queryName("avnow_out")
-      .outputMode("complete")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    try {
-      // AvailableNow must terminate on its own once the backlog drains
-      assert(q.awaitTermination(120000), "query did not self-terminate")
-      val got = spark.table("avnow_out")
-        .collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2))).toSet
-      val want = queries.Analytic.tumblingWindow(spark, sf)
-        .select("hour_sec", "event_type", "n_events")
-        .collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2))).toSet
-      assert(want.nonEmpty)
-      assert(got == want,
-        s"missing=${(want -- got).take(3)} extra=${(got -- want).take(3)}")
-    } finally q.stop()
-  }
-
   test("stateful agg recovers from a checkpoint restart: no loss, no double count") {
     val base = queries.SourcesSinks.tmp(spark, sf, "stream_ckpt")
     val srcDir = s"$base/src"; val ckpt = s"$base/ckpt"
@@ -240,30 +92,6 @@ class StreamingSpec extends SparkSpec {
     val want = evs.select("event_id").collect().map(_.getLong(0)).sorted
     assert(got.length == want.length, s"${got.length} != ${want.length}")
     assert(got.sameElements(want))
-  }
-
-  test("streaming sliding windows match the batch sliding-window analog") {
-    import spark.implicits._
-    val input = MemoryStream[Ev](spark)
-    val q = EventStream.sliding(input.toDF())
-      .writeStream.format("memory").queryName("sliding_out").outputMode("append").start()
-    try {
-      input.addData(loadEvents())
-      q.processAllAvailable()
-      // sentinels advance the watermark so every overlapping window closes
-      input.addData(Seq(sentinel(1))); q.processAllAvailable()
-      input.addData(Seq(sentinel(2))); q.processAllAvailable()
-      val got = spark.table("sliding_out").filter(col("event_type") =!= "x")
-        .collect()
-        .map(r => (r.getLong(0), r.getString(1)) -> (r.getLong(2), r.getDouble(3))).toMap
-      val want = queries.Analytic.slidingWindow(spark, sf)
-        .select("win_start", "event_type", "n_events", "sum_value")
-        .collect()
-        .map(r => (r.getLong(0), r.getString(1)) -> (r.getLong(2), r.getDouble(3))).toMap
-      assert(want.nonEmpty)
-      assert(got == want,
-        s"missing=${(want.toSet -- got.toSet).take(5)} extra=${(got.toSet -- want.toSet).take(5)}")
-    } finally q.stop()
   }
 
   test("transformWithState user profiles match the batch user stats") {
@@ -435,28 +263,6 @@ class StreamingSpec extends SparkSpec {
     } finally q.stop()
   }
 
-  test("streaming hourly windowed agg matches the batch tumbling window") {
-    import spark.implicits._
-    val input = MemoryStream[Ev](spark)
-    val q = EventStream.hourly(input.toDF())
-      .writeStream.format("memory").queryName("hourly_out").outputMode("append").start()
-    try {
-      input.addData(loadEvents())
-      q.processAllAvailable()
-      input.addData(Seq(sentinel(1))); q.processAllAvailable()
-      input.addData(Seq(sentinel(2))); q.processAllAvailable()
-      val got = spark.table("hourly_out").filter(col("event_type") =!= "x")
-        .collect()
-        .map(r => (r.getLong(0), r.getString(1)) -> r.getLong(2)).toMap
-      val want = queries.Analytic.tumblingWindow(spark, sf)
-        .select("hour_sec", "event_type", "n_events")
-        .collect()
-        .map(r => (r.getLong(0), r.getString(1)) -> r.getLong(2)).toMap
-      assert(want.nonEmpty)
-      assert(got == want)
-    } finally q.stop()
-  }
-
   test("streaming cents rounding equals the batch DECIMAL(18,2) cast, negatives included") {
     import spark.implicits._
     import org.apache.spark.sql.functions._
@@ -511,6 +317,48 @@ class StreamingSpec extends SparkSpec {
     val got = rowSet(graft.streaming.StreamQueries.intervalJoin(spark, sf))
     val want = rowSet(queries.Analytic.rangeJoin(spark, sf))
     assert(want.nonEmpty && got == want)
+  }
+
+  test("bounded-replay streaming sliding windows equal the batch sliding window") {
+    val got = rowSet(graft.streaming.StreamQueries.slidingAgg(spark, sf))
+    val want = rowSet(queries.Analytic.slidingWindow(spark, sf))
+    assert(want.nonEmpty && got == want,
+      s"missing=${(want -- got).take(3)} extra=${(got -- want).take(3)}")
+  }
+
+  test("bounded-replay stream-static enrichment equals the tier join in batch") {
+    import org.apache.spark.sql.functions._
+    // the activity tiers from the whole table, relative to the mean
+    // per-user count, joined to every event and rolled up in batch
+    val ev = graft.sources.Tables.events(spark, sf)
+    val perUser = ev.groupBy("user_id").agg(count(lit(1)).as("n_life"))
+    val (total, users) = perUser.agg(sum("n_life"), count(lit(1))).collect()
+      .map(r => (r.getLong(0), r.getLong(1))).head
+    val tiers = perUser.select(col("user_id"),
+      when(col("n_life") * users * 20 >= lit(total) * 21, "heavy")
+        .when(col("n_life") * users >= total, "mid").otherwise("light").as("tier"))
+    val want = rowSet(ev.join(tiers, "user_id").groupBy("tier", "event_type")
+      .agg(count(lit(1)).as("n_events"),
+        sum(col("value").cast("decimal(18,2)")).cast("double").as("sum_value")))
+    val got = rowSet(graft.streaming.StreamQueries.staticEnrich(spark, sf))
+    assert(want.map(_.split('|')(0)).size == 3, "the corpus does not fill all three tiers")
+    assert(got == want, s"missing=${(want -- got).take(3)} extra=${(got -- want).take(3)}")
+  }
+
+  test("chaos replay counts every on-time event once and no redelivered copy") {
+    import org.apache.spark.sql.functions._
+    // batch 1 carries the on-time slice; batch 2 redelivers 10% of the
+    // events, which dedup must drop, and batches 3-4 bring late first
+    // deliveries of which the watermark drops some. So the total lies
+    // between the on-time slice and the event count; counting the
+    // redelivered copies would take it to the event count or past it
+    val got = graft.streaming.StreamQueries.chaosReplay(spark, sf)
+      .agg(sum("n_events")).collect()(0).getLong(0)
+    val ev = graft.sources.Tables.events(spark, sf)
+    val onTime = ev.filter(col("event_id") % 20 > 1).count()
+    val all = ev.count()
+    assert(got >= onTime, s"$got below the on-time slice $onTime")
+    assert(got < all, s"$got of $all events: redelivered copies were counted")
   }
 
   test("late-redelivered rows beyond the watermark are dropped, not merged") {
